@@ -241,7 +241,7 @@ class CdcApplier:
                 f"{planning!r}"
             )
         # AQE has nothing to decide on the apply path — partition counts
-        # are pinned (the aligned exchange MUST be exactly n_buckets),
+        # are pinned (the aligned exchange MUST divide n_buckets),
         # skew is handled by explicit salting, and the broadcast-size
         # call is made from static parquet stats.  What AQE does add is
         # stage-by-stage scheduling + replanning latency: measured 7.4s
@@ -451,10 +451,11 @@ class CdcApplier:
 
         # conf pinned for the duration of this batch (same multi-tenant
         # caveat as ``adaptive`` — see __init__):
-        # - agg mode pins shuffle partitions to the bucket count so the
-        #   groupBy exchange (pmod(murmur3(url), N)) IS the table's
-        #   bucket transform — the dedup aggregate's one exchange doubles
-        #   as the write clustering, zero extra payload shuffles,
+        # - agg mode pins shuffle partitions to the table's aligned
+        #   partition count (a divisor of the bucket count) so the groupBy
+        #   exchange keeps every bucket whole in one task — the dedup
+        #   aggregate's one exchange doubles as the write clustering,
+        #   zero extra payload shuffles,
         # - and raises the ObjectHashAggregate sort fallback (default
         #   128 keys!) so the map-side partial max_by stays a hash
         #   aggregate instead of sorting every payload row.
@@ -462,7 +463,9 @@ class CdcApplier:
         if self.adaptive is not None:
             pinned["spark.sql.adaptive.enabled"] = str(bool(self.adaptive)).lower()
         if self.dedup_mode == "agg":
-            pinned["spark.sql.shuffle.partitions"] = str(self.pages.n_buckets())
+            pinned["spark.sql.shuffle.partitions"] = str(
+                self.pages.aligned_partitions()
+            )
             pinned["spark.sql.objectHashAggregate.sortBased.fallbackThreshold"] = (
                 str(self.agg_fallback_entries)
             )
@@ -829,21 +832,24 @@ class CdcApplier:
                     ]
                 n_hot = len(hot_list)
                 if not hot_list:
-                    # bucket-aligned exchange: repartitioning on url with
-                    # exactly n_buckets partitions makes the shuffle
-                    # partitioner (pmod(murmur3(url), N)) IDENTICAL to the
-                    # table's bucket transform, so the window dedup, the
-                    # bucketed write AND (cow mode) the merge join all
-                    # reuse this ONE payload exchange — task i of the
-                    # write holds exactly bucket i (verified by the commit
-                    # primitives' containment check).  In mor mode this is
-                    # the ONLY exchange in the whole merge subtree
-                    # (plan-locked by test_mor_merge_subtree_single_
-                    # exchange).  The salted hot-key path re-exchanges
-                    # subsets and loses the alignment, so it keeps the
-                    # explicit write clustering.
+                    # bucket-aligned exchange: repartitioning on url into
+                    # P partitions, P a divisor of the bucket count N,
+                    # puts every bucket whole into ONE task
+                    # (pmod(murmur3(url), N) mod P = pmod(murmur3(url), P)),
+                    # so the window dedup, the bucketed write AND (cow
+                    # mode) the merge join all reuse this ONE payload
+                    # exchange, and the write still emits one file per
+                    # touched bucket.  P is one task per core, not one
+                    # per bucket: every task of this stage starts a
+                    # Python worker for the fused UDF, and that set-up
+                    # cost is paid per task (see Table.aligned_partitions
+                    # and BASELINE.md).  In mor mode this is the ONLY
+                    # exchange in the whole merge subtree (plan-locked by
+                    # test_mor_merge_subtree_single_exchange).  The salted
+                    # hot-key path re-exchanges subsets and loses the
+                    # alignment, so it keeps the explicit write clustering.
                     valid = valid.repartition(
-                        self.pages.n_buckets(), F.col("url")
+                        self.pages.aligned_partitions(), F.col("url")
                     )
                     aligned = True
                 harvest = (
@@ -888,20 +894,21 @@ class CdcApplier:
                     ).drop("_events")
             elif self.dedup_mode == "agg":
                 # ONE exchange total: apply_batch pinned shuffle
-                # partitions to n_buckets, so the aggregate's hash
-                # exchange (pmod(murmur3(url), N)) is ALREADY the
-                # table's bucket transform — the write reuses it
-                # (clustered), exactly like the window path's explicit
-                # bucket-aligned repartition.  Map-side partial max_by
-                # collapses hot keys before the shuffle, so no salting
-                # machinery and no planning job exist in this mode.
+                # partitions to the table's aligned partition count (a
+                # divisor of n_buckets), so the aggregate's hash
+                # exchange already keeps every bucket whole in one task
+                # — the write reuses it (clustered), exactly like the
+                # window path's explicit bucket-aligned repartition.
+                # Map-side partial max_by collapses hot keys before the
+                # shuffle, so no salting machinery and no planning job
+                # exist in this mode.
                 winners = dedup_winners(valid)
                 aligned = (
                     self.merge_mode == "mor"
                     and int(
                         self.spark.conf.get("spark.sql.shuffle.partitions")
                     )
-                    == self.pages.n_buckets()
+                    == self.pages.aligned_partitions()
                 )
             else:  # "rank_join": payload never shuffles pre-merge
                 # the cached keys are only exact in "batch" mode; the
@@ -1406,15 +1413,15 @@ class CdcApplier:
 
             # FLAT prefixed layout: the s side keeps the ``url``
             # attribute itself as the join key, so when the apply stage
-            # pre-aligned the batch (repartition(n_buckets, url)),
-            # Catalyst SEES that the join's required distribution is
-            # already satisfied — the winner payload is never
+            # pre-aligned the batch (repartition(aligned_partitions(),
+            # url)), Catalyst SEES that the join's required distribution
+            # is already satisfied — the winner payload is never
             # re-shuffled (struct-packing would hide the attribute and
             # force a fresh exchange).  The join output is then still
-            # physically clustered by pmod(murmur3(url), n_buckets) =
-            # the bucket transform, so the write needs no clustering
-            # exchange either (``aligned``): payload bytes cross the
-            # wire exactly once per batch.
+            # physically clustered by pmod(murmur3(url), P), P dividing
+            # n_buckets, so every bucket sits whole in one task and the
+            # write needs no clustering exchange either (``aligned``):
+            # payload bytes cross the wire exactly once per batch.
             s = src.select(
                 F.col("url"),
                 F.lit(True).alias("_s_present"),

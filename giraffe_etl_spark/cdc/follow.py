@@ -107,11 +107,12 @@ class ChangelogFollower:
         ``where``: optional row predicate (SQL string over SOURCE
         columns) — a partial replica holding only matching rows.  To
         stay LWW-correct under late data, non-matching row versions are
-        not dropped but TOMBSTONIZED (key + merge-order columns kept,
-        payload nulled, deleted flag set): a key whose current winner
-        doesn't match leaves an index-sized stub that outranks any
-        late-arriving older version which does match — dropping it
-        instead would let that stale version resurrect in the replica.
+        not dropped but TOMBSTONIZED (bucket key, merge key and
+        merge-order columns kept, payload nulled, deleted flag set): a
+        key whose current winner doesn't match leaves an index-sized
+        stub that outranks any late-arriving older version which does
+        match — dropping it instead would let that stale version
+        resurrect in the replica.
         A row UPDATED from matching to non-matching therefore converges
         to a tombstone, exactly as a recompute of ``filter(where)``
         would hide it.  The predicate is fixed at creation (persisted;
@@ -255,9 +256,10 @@ class ChangelogFollower:
         """Tombstonize row versions that fail the replica's predicate.
 
         Matching live rows pass through; everything else (non-matching,
-        null-predicate, already-deleted) keeps only the key +
-        merge-order columns and the deleted flag — an index-sized stub
-        whose merge-order still outranks late-arriving older versions.
+        null-predicate, already-deleted) keeps only the bucket key, the
+        merge key, the merge-order columns and the deleted flag — an
+        index-sized stub whose merge-order still outranks late-arriving
+        older versions.
         """
         from pyspark.sql import functions as F
 
@@ -267,12 +269,15 @@ class ChangelogFollower:
         from .apply import ENGINE_COLS
 
         src_snap = self.src.current_snapshot()
+        # same required set as _resolve_projection: a stub without its
+        # merge key would fold under a null key and block nothing
         keep = {src_snap.properties["bucket.key"]}
-        keep |= {
-            c.strip()
-            for c in src_snap.properties.get("merge.order", "").split(",")
-            if c.strip()
-        }
+        for prop in ("merge.key", "merge.order"):
+            keep |= {
+                c.strip()
+                for c in src_snap.properties.get(prop, "").split(",")
+                if c.strip()
+            }
         keep |= set(ENGINE_COLS)
         cond = F.coalesce(F.expr(where), F.lit(False)) & ~F.col("_deleted")
         cols = []

@@ -22,7 +22,8 @@ idempotently.
 Behavior studied (not ported): the reference has no changelog and no
 derived-view maintenance; its nearest analog is re-running an
 aggregating process over re-imported output files
-(libgiraffe2 src/dataprocessor/processing_node.cpp task chains).
+(libgiraffe2 factories/InnerNodeSource.java:207-222, the generated
+node task chain).
 """
 
 from __future__ import annotations
@@ -183,12 +184,27 @@ class IncrementalRollup:
         )
 
     def sync(self) -> dict:
-        """Fold all source commits since the cursor into the rollup."""
+        """Fold all source commits since the cursor into the rollup.
+
+        Returns ``commits`` (source commits folded), ``rewrites_skipped``
+        (rewrite commits passed over under ``on_rewrite="skip"``),
+        ``src_range`` (the source snapshot window (from, to]) and
+        ``src_snapshot`` (the new cursor).
+        """
         head = self.src.current_snapshot()
         cursor = self.cursor
         if head.snapshot_id <= cursor:
-            return {"commits": 0, "src_snapshot": cursor}
+            return {
+                "commits": 0,
+                "rewrites_skipped": 0,
+                "src_range": (cursor, cursor),
+                "src_snapshot": cursor,
+            }
         try:
+            # driver-side manifest walk for the report; read_changes
+            # below does the same classification (a commit that
+            # removed files is a rewrite)
+            window = self.src.commits_between(cursor, head.snapshot_id)
             ch = self.src.read_changes(
                 cursor,
                 head.snapshot_id,
@@ -275,7 +291,13 @@ class IncrementalRollup:
             merged,
             properties_update={_CURSOR_PROP: str(head.snapshot_id)},
         )
-        return {"commits": 1, "src_snapshot": head.snapshot_id}
+        n_rewrites = sum(1 for _, _, removed in window if removed)
+        return {
+            "commits": len(window) - n_rewrites,
+            "rewrites_skipped": n_rewrites,
+            "src_range": (cursor, head.snapshot_id),
+            "src_snapshot": head.snapshot_id,
+        }
 
     def read(self) -> DataFrame:
         """The rollup: one row per group with live rows (the hidden

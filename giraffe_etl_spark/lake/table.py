@@ -65,6 +65,15 @@ _WIDENINGS = {
 }
 
 
+def aligned_partition_count(n_buckets: int, slots: int) -> int:
+    """Smallest divisor of ``n_buckets`` that is >= ``slots``, else
+    ``n_buckets`` (see ``Table.aligned_partitions``)."""
+    return next(
+        (p for p in range(max(slots, 1), n_buckets) if n_buckets % p == 0),
+        n_buckets,
+    )
+
+
 class SnapshotExpired(Exception):
     """A referenced snapshot's manifest no longer exists (expired)."""
 
@@ -469,6 +478,21 @@ class Table:
         key = col or self.bucket_key()
         return F.pmod(F.hash(F.col(key)), F.lit(self.n_buckets())).cast("int")
 
+    def aligned_partitions(self) -> int:
+        """Partition count for a bucket-aligned hash exchange on the key.
+
+        ``repartition(P, key)`` places a row in task pmod(murmur3(key), P).
+        When P divides the bucket count N, that equals
+        pmod(bucket, P), so every bucket lands whole in ONE task and a
+        write after the exchange needs no clustering of its own.  P is
+        the smallest such divisor that still fills every slot, so the
+        exchange runs one task per core instead of one per bucket
+        (each Python-UDF task pays a fixed worker set-up cost).
+        """
+        return aligned_partition_count(
+            self.n_buckets(), self.spark.sparkContext.defaultParallelism
+        )
+
     def bucket_of(self, *keys, n_buckets: int | None = None) -> list[int]:
         """Bucket ids for literal key values.
 
@@ -662,10 +686,11 @@ class Table:
 
         ``clustered=True`` asserts the caller already arranged the
         physical partitioning so that every task holds rows of at most
-        a few buckets (e.g. the CDC merge pipeline's bucket-aligned
-        ``repartition(n_buckets, url)`` — partitioner identical to the
-        bucket transform, one bucket per task): the write then inserts
-        NO exchange, and the payload is not shuffled again.
+        whole buckets only (e.g. the CDC merge pipeline's bucket-aligned
+        ``repartition(aligned_partitions(), url)`` — the partition count
+        divides the bucket count, so each bucket lands in exactly one
+        task): the write then inserts NO exchange, and the payload is
+        not shuffled again.
         """
         import pyarrow.parquet as pq
 

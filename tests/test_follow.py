@@ -528,6 +528,46 @@ def test_filtered_follower_tombstones_block_late_losers(spark, tmp_root):
     assert _live(t, ["url", "lang"]) == [("fr", "u1"), ("fr", "u2")]
 
 
+def test_filtered_follower_stubs_keep_distinct_merge_key(spark, tmp_root):
+    """With merge.key distinct from the bucket key, tombstone stubs must
+    keep the merge key: a stub folded under a null key blocks nothing,
+    and a late-arriving older matching version resurrects."""
+    from pyspark.sql.types import StructType
+
+    from giraffe_etl_spark.lake import Table
+
+    schema = StructType.fromDDL(
+        "bkt string, k string, ts long, lang string, _lsn long, _deleted boolean"
+    )
+    t = Table.create(
+        spark,
+        os.path.join(tmp_root, "t"),
+        schema,
+        bucket_key="bkt",
+        n_buckets=2,
+        properties={"merge.key": "k", "merge.order": "ts,_lsn"},
+    )
+    rows = lambda xs: spark.createDataFrame(xs, schema)
+    t.append(rows([("a", "k1", 1, "en", 1, False), ("b", "k2", 1, "fr", 2, False)]))
+    f = ChangelogFollower(
+        spark, t, os.path.join(tmp_root, "dst"), where="lang = 'en'"
+    )
+    assert _live(f.dst, ["k", "lang"]) == [("k1", "en")]
+
+    # k1 leaves the predicate, then late older matching versions arrive
+    t.append_deltas(None, rows([("a", "k1", 3, "fr", 3, False)]))
+    f.sync()
+    t.append_deltas(
+        None,
+        rows([("a", "k1", 2, "en", 4, False), ("b", "k2", 0, "en", 5, False)]),
+    )
+    f.sync()
+    assert _live(f.dst, ["k", "lang"]) == []
+    # one stub per key, each under its own merge key
+    stubs = f.dst.read(reconcile=True).filter("_deleted")
+    assert sorted(r["k"] for r in stubs.collect()) == ["k1", "k2"]
+
+
 def test_filtered_follower_composes_with_projection(
     spark, tmp_root, src_applier
 ):

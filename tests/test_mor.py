@@ -87,20 +87,76 @@ def test_mor_commit_io_scales_with_batch_not_table(spark, tmp_root):
 
 
 def test_mor_merge_subtree_single_exchange(spark, tmp_root):
-    """The full MOR merge frame plans exactly ONE shuffle exchange."""
+    """The full MOR merge frame plans exactly ONE shuffle exchange.
+
+    32 buckets on the 8-slot session: the aligned exchange has fewer
+    partitions than buckets, and the one exchange is that one.
+    """
+    import re
+
     from tests.test_plans import n_exchanges, plan_of
 
-    ap = CdcApplier(spark, tmp_root, n_buckets=8, merge_mode="mor")
+    ap = CdcApplier(spark, tmp_root, n_buckets=32, merge_mode="mor")
     seed_pages(ap.pages, spark.createDataFrame(gen_pages(50)))
     changes = _batch(spark, 40, n_keys=20)
     tagged = tag_batch(changes, exprs=ap._exprs)
     valid = tagged.filter(F.col("_reason").isNull()).drop("_reason")
-    valid = valid.repartition(ap.pages.n_buckets(), F.col("url"))
+    n_parts = ap.pages.aligned_partitions()
+    assert n_parts == 8
+    valid = valid.repartition(n_parts, F.col("url"))
     winners = dedup_winners_window(valid)
     src = winners.withColumn("_bucket", ap.pages.bucket_expr("url"))
     delta = ap._delta_frame(src, ap.pages.current_snapshot())
     plan = plan_of(delta)
     assert n_exchanges(plan) == 1, plan
+    assert re.search(r"hashpartitioning\(url#\d+, 8\)", plan), plan
+
+
+@pytest.mark.parametrize(
+    "n_buckets,slots,want",
+    [(32, 1, 1), (32, 4, 4), (32, 8, 8), (32, 64, 32), (12, 8, 12), (6, 4, 6)],
+)
+def test_aligned_partition_count(n_buckets, slots, want):
+    """Smallest divisor of the bucket count that fills every slot."""
+    from giraffe_etl_spark.lake.table import aligned_partition_count
+
+    assert aligned_partition_count(n_buckets, slots) == want
+
+
+def _write_stage_tasks(st, mark: int) -> list[int]:
+    """Tasks of the final stage of every shuffled parquet-write job
+    since ``mark`` (job-id range on the status tracker)."""
+    out = []
+    for j in sorted(x for x in st.getJobIdsForGroup(None) if x > mark):
+        ids = st.getJobInfo(j).stageIds
+        last = st.getStageInfo(max(ids))
+        if len(ids) > 1 and last.name.startswith("parquet"):
+            out.append(last.numCompletedTasks)
+    return out
+
+
+def test_aligned_write_runs_one_task_per_slot(spark, tmp_root):
+    """32 buckets on the 8-slot session, uniform keys (the aligned
+    path): the merge write runs 8 tasks, still writes one delta file
+    per touched bucket, and matches the oracle."""
+    from tests.test_cdc_apply import assert_matches_oracle, spark_changes
+
+    from giraffe_etl_spark.cdc.generate import ChangeGenConfig, gen_changes
+
+    ap = CdcApplier(spark, tmp_root, n_buckets=32, merge_mode="mor")
+    pages = gen_pages(200)
+    seed_pages(ap.pages, spark.createDataFrame(pages))
+    changes = gen_changes(400, ChangeGenConfig(n_keys=200))
+    st = spark.sparkContext.statusTracker()
+    mark = max(st.getJobIdsForGroup(None), default=-1)
+    res = ap.apply_batch(spark_changes(spark, changes), batch_id=0)
+
+    assert res.hot_keys_detected == 0
+    assert _write_stage_tasks(st, mark) == [8]
+    deltas = ap.pages.current_snapshot().deltas
+    assert len(deltas) == 32, sorted(deltas)
+    assert all(len(fs) == 1 for fs in deltas.values()), deltas
+    assert_matches_oracle(ap, pages, changes)
 
 
 def test_mor_apply_matches_cow_apply(spark, tmp_root):

@@ -121,11 +121,12 @@ def test_exact_dedup_single_shuffle(spark):
 def test_aligned_apply_single_payload_exchange(spark, tmp_root):
     """The bucket-aligned CDC path shuffles payload bytes exactly once.
 
-    repartition(n_buckets, url) satisfies the window's required
-    distribution AND the bucketed write's clustering, so the merge
-    subtree must contain exactly ONE payload exchange (plus the tiny
-    keys-side aggregates).  Verified on the physical plan of the
-    merged frame the write job executes.
+    repartition(aligned_partitions(), url) — a partition count that
+    divides the bucket count, so each bucket sits whole in one task —
+    satisfies the window's required distribution AND the bucketed
+    write's clustering, so the merge subtree must contain exactly ONE
+    payload exchange (plus the tiny keys-side aggregates).  Verified on
+    the physical plan of the merged frame the write job executes.
     """
     import datetime as dt
 
@@ -146,7 +147,7 @@ def test_aligned_apply_single_payload_exchange(spark, tmp_root):
     )
     tagged = tag_batch(changes, exprs=applier._exprs)
     valid = tagged.filter(F.col("_reason").isNull()).drop("_reason")
-    valid = valid.repartition(applier.pages.n_buckets(), F.col("url"))
+    valid = valid.repartition(applier.pages.aligned_partitions(), F.col("url"))
     # the real pipeline fuses the pandas-UDF transform chain AFTER the
     # merge join (apply.py): a pandas UDF here would break partitioning
     # propagation and force a redundant winner-payload exchange
@@ -156,8 +157,8 @@ def test_aligned_apply_single_payload_exchange(spark, tmp_root):
     joined = winners.join(target, "url", "full_outer")
     plan = plan_of(joined)
     # EXACTLY two shuffle exchanges: (1) the batch side's aligning
-    # repartition(n_buckets, url), which the window dedup AND the join
-    # both reuse — batch payload crosses the wire once; (2) the target
+    # repartition(aligned_partitions(), url), which the window dedup AND
+    # the join both reuse — batch payload crosses the wire once; (2) the target
     # side's join exchange (full-outer cannot broadcast), bounded by
     # bucket pruning to the touched buckets.  A third exchange means
     # the alignment was lost and payload is being re-shuffled.

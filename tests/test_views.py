@@ -103,6 +103,36 @@ def test_rollup_sync_is_idempotent(spark, tmp_root, src_applier):
     assert _rollup_rows(again) == before
 
 
+def test_rollup_sync_reports_its_window(spark, tmp_root, src_applier):
+    """A 3-commit window holding a compaction: two commits folded, the
+    rewrite skipped, and the (from, to] source range reported."""
+    _apply(spark, src_applier, 0, 100, 0)
+    rollup = IncrementalRollup(
+        spark,
+        src_applier.pages,
+        os.path.join(tmp_root, "rollup"),
+        group_cols=["lang"],
+        measures=MEASURES,
+        on_rewrite="skip",
+    )
+    start = rollup.cursor
+    _apply(spark, src_applier, 100, 200, 1)
+    src_applier.pages.compact_deltas()
+    _apply(spark, src_applier, 200, 300, 2)
+    head = src_applier.pages.current_snapshot().snapshot_id
+    assert head == start + 3
+
+    rep = rollup.sync()
+    assert rep == {
+        "commits": 2,
+        "rewrites_skipped": 1,
+        "src_range": (start, head),
+        "src_snapshot": head,
+    }
+    assert _rollup_rows(rollup) == _recompute(src_applier.pages)
+    assert rollup.sync()["src_range"] == (head, head)
+
+
 def test_rollup_fully_retracted_group_disappears(spark, tmp_root):
     """When every row of a group is deleted, the group leaves the
     rollup — exactly as a recompute would drop it."""
