@@ -128,12 +128,7 @@ def _warm_apply_pipeline(spark, cfg, n_events: int = 100_000):
 
     root = tempfile.mkdtemp(prefix="cdc_warm_")
     try:
-        applier = CdcApplier(
-            spark, root, n_buckets=32,
-            dedup_mode=os.environ.get("SPARK_GRAFT_DEDUP", "window"),
-            materialize=os.environ.get("SPARK_GRAFT_MATERIALIZE", "keys"),
-            merge_mode=os.environ.get("SPARK_GRAFT_MERGE", "mor"),
-        )
+        applier = CdcApplier(spark, root, n_buckets=32)
         seed_pages(applier.pages, spark.createDataFrame(gen_pages(500)))
         log_path = os.path.join(root, "_log")
         par = spark.sparkContext.defaultParallelism
@@ -192,12 +187,7 @@ def run_cdc_bench(
             late_frac=0.05, dup_frac=0.01, malformed_frac=0.01,
             html_size=html_size,
         )
-        applier = CdcApplier(
-            spark, root, n_buckets=n_buckets,
-            dedup_mode=os.environ.get("SPARK_GRAFT_DEDUP", "window"),
-            materialize=os.environ.get("SPARK_GRAFT_MATERIALIZE", "keys"),
-            merge_mode=os.environ.get("SPARK_GRAFT_MERGE", "mor"),
-        )
+        applier = CdcApplier(spark, root, n_buckets=n_buckets)
         seed_pages(applier.pages, spark.createDataFrame(gen_pages(min(n_keys, 5000))))
         # stage the change stream as a persisted binlog BEFORE the timed
         # region: a deployment tails an existing log; synthesizing the

@@ -7,7 +7,8 @@ error routing, key-based memoized (idempotent) apply, resumable
 checkpoints, per-node metrics — re-expressed Spark-first:
 
 - change batches are DataFrames; the apply stage is a key-partitioned
-  dedup-then-MERGE (groupBy(url).max_by for map-side-combining dedup),
+  dedup-then-MERGE (a row_number() window over the bucket-aligned
+  exchange, hot keys salted),
 - per-record transform chains are vectorized pandas/Arrow UDFs,
 - error routes are quarantine table writes,
 - the BDB state store is a snapshot-isolated lake table (``lake.Table``)

@@ -34,7 +34,7 @@ def validity_reason(op, url, warc_ts, html) -> str | None:
     """Return a quarantine reason string, or None when the event is valid.
 
     The same rule set drives the Spark-side quarantine routing; keep in
-    sync with cdc/plan.py::split_quarantine.
+    sync with cdc/plan.py::batch_exprs.
     """
     if url is None or (isinstance(url, str) and url.strip() == ""):
         return "null_url"

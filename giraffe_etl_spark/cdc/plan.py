@@ -1,99 +1,54 @@
-"""Batch planning: quarantine routing, canonicalization, per-key dedup.
+"""Batch planning: validity tagging, canonicalization, per-key dedup.
 
 All pure DataFrame -> DataFrame builders (no actions), so Catalyst sees
 one logical plan per batch and can pipeline projection/filter stages
 into a single whole-stage-codegen'd pass over the scan.
 
-Dedup strategy (the heart of the apply stage):
-
-``dedup_winners_window`` (the applier's DEFAULT) is the row_number()
-formulation over the bucket-aligned exchange, plus sampled hot-key
-detection + salting (two-phase: per (url, salt) top-1, then per url
-top-1).  The payload crosses exactly ONE exchange, which doubles as
-the write clustering.
-
-``dedup_winners`` is ``groupBy(url).agg(max_by(payload, (warc_ts,
-lsn)))``.  Map-side partial aggregation collapses hot keys *before*
-the shuffle (at most #map-tasks pre-aggregated rows per hot key), so
-it needs no salting machinery and no planning job at all — this is the
-same trick as giraffe-etl's per-value memoization (compute once per
-distinct value, ProcessingEngine.java:74-89 — behavior studied, not
-ported) done with relational algebra.  Why it is NOT the default:
-``max_by`` is a *declarative* aggregate with a complex-typed buffer,
-which Spark can only execute as SortAggregate — both the partial and
-final aggregates SORT full payload rows, measured slower than the
-window formulation's single post-shuffle sort.  It stays the right
-choice for extreme-skew streams where sampled detection is unreliable
-(each map task emits one row per distinct key regardless of skew).
+Dedup (the heart of the apply stage): ``dedup_winners_window`` is the
+row_number() formulation over the bucket-aligned exchange, plus hot-key
+salting from the applier's skew plan (two-phase: per (url, salt)
+top-1, then per url top-1).  The payload crosses exactly ONE exchange,
+which doubles as the write clustering.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from ..functions.udf import extract_text_udf, normalize_url_udf, tag_lang_udf
 
-CHANGE_COLS = ["lsn", "op", "url", "warc_ts", "html"]
-
-
-def split_quarantine(changes: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Route malformed events to the dead-letter side with a reason.
-
-    Mirrors cdc/oracle.py::validity_reason exactly (single contract).
-    Reference analog: giraffe's error events + discard routes
-    (dataprocessing.xsd:84-111 — behavior only).
-    """
-    reason = (
-        F.when(F.col("url").isNull() | (F.trim(F.col("url")) == ""), "null_url")
-        .when(~F.col("op").isin("I", "U", "D"), "bad_op")
-        .when(F.col("warc_ts").isNull(), "null_warc_ts")
-        .when(F.col("op").isin("I", "U") & F.col("html").isNull(), "null_html")
-    )
-    tagged = changes.withColumn("_reason", reason)
-    valid = tagged.filter(F.col("_reason").isNull()).drop("_reason")
-    quarantined = tagged.filter(F.col("_reason").isNotNull()).withColumnRenamed(
-        "_reason", "reason"
-    )
-    return valid, quarantined
-
-
-def batch_exprs(mode: str = "expr"):
+def batch_exprs():
     """(reason, canonical-url) Column pair used by ``tag_batch``.
 
-    Building the normalize expression tree costs ~1 s of driver-side
-    py4j round trips — a pure serial cost if rebuilt per batch.  Column
-    objects are immutable unresolved references, reusable across any
-    DataFrame with the named columns, so a long-lived applier builds
-    this pair ONCE and amortizes it over every batch it applies.
+    The reason rules mirror cdc/oracle.py::validity_reason exactly
+    (single contract).  Building the normalize expression tree costs
+    ~1 s of driver-side py4j round trips — a pure serial cost if
+    rebuilt per batch.  Column objects are immutable unresolved
+    references, reusable across any DataFrame with the named columns,
+    so a long-lived applier builds this pair ONCE and amortizes it over
+    every batch it applies.
     """
+    from ..functions.url_expr import normalize_url_expr
+
     reason = (
         F.when(F.col("url").isNull() | (F.trim(F.col("url")) == ""), "null_url")
         .when(~F.col("op").isin("I", "U", "D"), "bad_op")
         .when(F.col("warc_ts").isNull(), "null_warc_ts")
         .when(F.col("op").isin("I", "U") & F.col("html").isNull(), "null_html")
     )
-    if mode == "udf":
-        canon = normalize_url_udf(F.col("url"))
-    else:
-        from ..functions.url_expr import normalize_url_expr
-
-        canon = normalize_url_expr(F.col("url"))
-    return reason, canon
+    return reason, normalize_url_expr(F.col("url"))
 
 
-def tag_batch(changes: DataFrame, mode: str = "expr", exprs=None) -> DataFrame:
-    """Single-pass validity tagging + canonicalization (the cache shape).
+def tag_batch(changes: DataFrame, exprs=None) -> DataFrame:
+    """Single-pass validity tagging + canonicalization.
 
     Adds ``_reason`` (null = valid) and replaces ``url`` with the
     canonical CDC key for valid rows (quarantined rows keep the raw
-    url).  The apply stage persists THIS projection, so the normalize
-    expression is evaluated exactly once per event — quarantine
-    routing, keys-only planning, and the dedup+merge job all reread the
-    canonical batch from cache instead of re-deriving it.
+    url), so the normalize expression is evaluated once per event in
+    the merge job's scan.
 
     ``exprs``: a prebuilt ``batch_exprs`` pair (see its docstring).
     """
-    reason, canon = exprs if exprs is not None else batch_exprs(mode)
+    reason, canon = exprs if exprs is not None else batch_exprs()
     tagged = changes.withColumn("_reason", reason)
     return tagged.withColumn(
         "url",
@@ -101,72 +56,20 @@ def tag_batch(changes: DataFrame, mode: str = "expr", exprs=None) -> DataFrame:
     )
 
 
-def canonicalize(valid: DataFrame, mode: str = "expr") -> DataFrame:
-    """Replace url with its canonical (normalized) form — the CDC key.
-
-    ``expr`` (default): JVM Catalyst expression — stays inside
-    whole-stage codegen; the alternative pandas UDF costs a full Arrow
-    round trip of the change batch (html included) through Python
-    *before* the key shuffle (~4 s per 100 MB batch, measured).
-    ``udf``: full urllib semantics for URLs outside the expression's
-    simple grammar (see functions/url_expr.py parity contract).
-    """
-    if mode == "udf":
-        return valid.withColumn("url", normalize_url_udf(F.col("url")))
-    from ..functions.url_expr import normalize_url_expr
-
-    return valid.withColumn("url", normalize_url_expr(F.col("url")))
-
-
-def dedup_winners(valid: DataFrame) -> DataFrame:
-    """Per-url winning event by max (warc_ts, lsn) — agg formulation.
-
-    One shuffle on url, with map-side partial aggregation (skew-proof,
-    see module docstring).  Schema-generic: whatever columns the change
-    stream carries (e.g. post-evolution extras) ride along in the
-    winner payload.
-
-    NOTE: the full payload (html) rides through the shuffle, and the
-    aggregate executes as SortAggregate on both sides of it (see module
-    docstring) — measure against the window formulation before
-    preferring this for anything but extreme-skew streams.
-    """
-    cols = valid.columns
-    payload = F.struct(*[F.col(c) for c in cols])
-    rank = F.struct(F.col("warc_ts"), F.col("lsn"))
-    won = valid.groupBy("url").agg(F.max_by(payload, rank).alias("w"))
-    return won.select(*[F.col(f"w.{c}").alias(c) for c in cols])
-
-
-def key_stats(valid: DataFrame) -> DataFrame:
-    """Per-key aggregate powering planning, skew detection AND dedup.
-
-    One map-side-combined shuffle of ``(url, count, max(warc_ts, lsn))``
-    — a few bytes per event regardless of payload width.  The apply
-    stage persists the (small: one row per distinct key) result and
-    reuses it three ways: touched-bucket planning, hot-key detection,
-    and the rank join that picks winner payloads without shuffling
-    them.
-    """
-    return valid.groupBy("url").agg(
-        F.count(F.lit(1)).alias("_events"),
-        F.max(F.struct("warc_ts", "lsn")).alias("_r"),
-    )
-
-
 def key_stats_two_level(raw: DataFrame, canon) -> DataFrame:
-    """``key_stats`` with canonicalization lifted above a raw-url agg.
+    """Per canonical key: event count and max (warc_ts, lsn), with
+    canonicalization lifted above a raw-url aggregate.
 
     A change stream has many events per key (that is why dedup-then-
     merge exists), so normalizing every EVENT's url pays the regex
     chain once per event.  Aggregating by the raw url first (map-side
-    combined — the same few-bytes-per-event shuffle ``key_stats``
-    already does), normalizing only the distinct raw urls that survive,
-    then re-aggregating by the canonical key computes the identical
-    result — counts sum, (warc_ts, lsn) maxes take the max of maxes —
-    with the normalize expression evaluated once per DISTINCT raw url
-    instead of once per event.  The second aggregate runs over one row
-    per distinct key, so its shuffle is noise.
+    combined — a few bytes per event regardless of payload width),
+    normalizing only the distinct raw urls that survive, then
+    re-aggregating by the canonical key computes the identical result
+    — counts sum, (warc_ts, lsn) maxes take the max of maxes — with the
+    normalize expression evaluated once per DISTINCT raw url instead of
+    once per event.  The second aggregate runs over one row per
+    distinct key, so its shuffle is noise.
 
     ``raw``: (url, warc_ts, lsn) with the raw (non-canonical) url;
     ``canon``: the canonicalization Column over ``url``.
@@ -182,81 +85,29 @@ def key_stats_two_level(raw: DataFrame, canon) -> DataFrame:
     )
 
 
-def dedup_winners_rank_join(valid: DataFrame, ranks: DataFrame | None = None) -> DataFrame:
-    """Per-url winner via rank-only shuffle + join-back (payload-free).
-
-    Phase 1 aggregates just ``(url, warc_ts, lsn)`` — a shuffle of a
-    few bytes per event regardless of html size, still map-side
-    combined (skew-proof).  Phase 2 joins the winner ranks back
-    against the un-shuffled batch; the rank side is one small row per
-    distinct key, so AQE picks a broadcast hash join and the payload
-    rows are filtered *in place* in the scan partitions.  Consequences
-    at scale: (a) html bytes cross the network only once (at the
-    MERGE write), (b) the downstream transform UDFs keep the scan's
-    full parallelism instead of AQE-coalesced post-shuffle partitions.
-
-    Requires (warc_ts, lsn) to be unique per url among valid events —
-    lsn is globally unique by contract, so the join returns exactly
-    one row per key.
-
-    ``ranks``: pass a precomputed (and ideally cached) ``key_stats``
-    frame to reuse one aggregate across planning and dedup.
-    """
-    if ranks is None:
-        ranks = key_stats(valid)
-    ranks = ranks.select("url", "_r")
-    # explicit aliases: ranks derives from valid, so unqualified column
-    # references would be ambiguous in the self-join
-    v, r = valid.alias("_dw_v"), ranks.alias("_dw_r")
-    winners = v.join(
-        r,
-        (F.col("_dw_v.url") == F.col("_dw_r.url"))
-        & (F.col("_dw_v.warc_ts") == F.col("_dw_r._r.warc_ts"))
-        & (F.col("_dw_v.lsn") == F.col("_dw_r._r.lsn")),
-    )
-    return winners.select(*[F.col(f"_dw_v.{c}").alias(c) for c in valid.columns])
-
-
-def detect_hot_keys(
-    valid: DataFrame, threshold: int, sample_fraction: float | None = None
-) -> DataFrame:
-    """Keys whose event count exceeds ``threshold`` (optionally sampled).
-
-    At 10^10-event scale run this on a deterministic sample (seeded) and
-    scale the threshold; output is small (it's a *hot* key list) and is
-    broadcast by the salting join.
-    """
-    src = valid
-    scale = 1.0
-    if sample_fraction and sample_fraction < 1.0:
-        src = valid.sample(fraction=sample_fraction, seed=7)
-        scale = 1.0 / sample_fraction
-    return (
-        src.groupBy("url")
-        .agg((F.count(F.lit(1)) * F.lit(scale)).alias("est_events"))
-        .filter(F.col("est_events") > threshold)
-        .select("url", "est_events")
-    )
+def _whole_partition(w):
+    return w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
 
 
 def dedup_winners_window(
     valid: DataFrame,
-    hot_keys=None,
+    hot_keys: list[str] | None = None,
     n_salts: int = 16,
     with_counts: bool = False,
 ) -> DataFrame:
-    """row_number() formulation with explicit hot-key salting.
+    """Per-url winning event by max (warc_ts, lsn): row_number() with
+    explicit hot-key salting.
 
     Cold keys: single window over (url).  Hot keys: phase 1 picks a
     winner per (url, salt) with salt = pmod(hash(lsn), n_salts) —
     spreads one hot key over n_salts reducers; phase 2 reduces the
-    <= n_salts survivors per key.
+    <= n_salts survivors per key.  Schema-generic: whatever columns
+    the change stream carries (e.g. post-evolution extras) ride along
+    in the winner payload.
 
-    ``hot_keys``: a small list of hot url strings (compiled into an
-    ``isin`` predicate — no extra job, no broadcast exchange; the apply
-    stage harvests the list from its planning aggregate for free) or a
-    DataFrame with a ``url`` column (broadcast semi/anti join — for
-    callers using ``detect_hot_keys`` standalone).
+    ``hot_keys``: a small list of hot url strings, compiled into an
+    ``isin`` predicate — no extra job, no broadcast exchange (the apply
+    stage reads the list from its skew plan).
 
     ``with_counts``: winners additionally carry ``_events`` — the
     key's exact event count in this batch.  It rides the SAME window
@@ -266,85 +117,33 @@ def dedup_winners_window(
     and no job — this is what lets the apply stage harvest next-batch
     skew statistics from an Observation instead of a planning pass.
     """
-    if isinstance(hot_keys, (list, tuple)) and not hot_keys:
-        hot_keys = None
-    if hot_keys is None:
-        w = Window.partitionBy("url").orderBy(
-            F.col("warc_ts").desc(), F.col("lsn").desc()
-        )
-        out = valid.withColumn("_rn", F.row_number().over(w))
+    order = (F.col("warc_ts").desc(), F.col("lsn").desc())
+    w = Window.partitionBy("url").orderBy(*order)
+
+    def top1(df: DataFrame) -> DataFrame:
+        out = df.withColumn("_rn", F.row_number().over(w))
         if with_counts:
-            out = out.withColumn(
-                "_events",
-                F.count(F.lit(1)).over(
-                    w.rowsBetween(
-                        Window.unboundedPreceding, Window.unboundedFollowing
-                    )
-                ),
-            )
+            out = out.withColumn("_events", F.count(F.lit(1)).over(_whole_partition(w)))
         return out.filter(F.col("_rn") == 1).drop("_rn")
 
-    if isinstance(hot_keys, (list, tuple)):
-        is_hot = F.col("url").isin(list(hot_keys))
-        marked = valid.filter(is_hot)
-        cold = valid.filter(~is_hot)
-    else:
-        marked = valid.join(F.broadcast(hot_keys.select("url")), "url", "left_semi")
-        cold = valid.join(F.broadcast(hot_keys.select("url")), "url", "left_anti")
+    if not hot_keys:
+        return top1(valid)
 
-    w_cold = Window.partitionBy("url").orderBy(
-        F.col("warc_ts").desc(), F.col("lsn").desc()
-    )
-    cold_winners = cold.withColumn("_rn", F.row_number().over(w_cold))
-    if with_counts:
-        cold_winners = cold_winners.withColumn(
-            "_events",
-            F.count(F.lit(1)).over(
-                w_cold.rowsBetween(
-                    Window.unboundedPreceding, Window.unboundedFollowing
-                )
-            ),
-        )
-    cold_winners = cold_winners.filter(F.col("_rn") == 1).drop("_rn")
+    is_hot = F.col("url").isin(list(hot_keys))
+    cold_winners = top1(valid.filter(~is_hot))
 
-    salted = marked.withColumn("_salt", F.pmod(F.hash("lsn"), F.lit(n_salts)))
-    w1 = Window.partitionBy("url", "_salt").orderBy(
-        F.col("warc_ts").desc(), F.col("lsn").desc()
+    salted = valid.filter(is_hot).withColumn(
+        "_salt", F.pmod(F.hash("lsn"), F.lit(n_salts))
     )
+    w1 = Window.partitionBy("url", "_salt").orderBy(*order)
     phase1 = salted.withColumn("_rn", F.row_number().over(w1))
     if with_counts:
-        phase1 = phase1.withColumn(
-            "_cnt",
-            F.count(F.lit(1)).over(
-                w1.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-            ),
-        )
+        phase1 = phase1.withColumn("_cnt", F.count(F.lit(1)).over(_whole_partition(w1)))
     phase1 = phase1.filter(F.col("_rn") == 1).drop("_rn", "_salt")
-    w2 = Window.partitionBy("url").orderBy(
-        F.col("warc_ts").desc(), F.col("lsn").desc()
-    )
-    hot_winners = phase1.withColumn("_rn", F.row_number().over(w2))
+    hot_winners = phase1.withColumn("_rn", F.row_number().over(w))
     if with_counts:
         hot_winners = hot_winners.withColumn(
-            "_events",
-            F.sum("_cnt").over(
-                w2.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-            ),
+            "_events", F.sum("_cnt").over(_whole_partition(w))
         ).drop("_cnt")
     hot_winners = hot_winners.filter(F.col("_rn") == 1).drop("_rn")
     return cold_winners.unionByName(hot_winners)
-
-
-def transform_winners(winners: DataFrame) -> DataFrame:
-    """The vectorized transform chain, applied post-dedup.
-
-    Running the pandas UDFs *after* dedup means the expensive html ->
-    text work happens once per surviving key, not once per raw event —
-    the giraffe memoization insight applied at plan level.  Delete
-    winners carry null payloads (tombstone shape).
-    """
-    text = F.when(F.col("op") != "D", extract_text_udf(F.col("html")))
-    out = winners.withColumn("text", text)
-    return out.withColumn(
-        "lang", F.when(F.col("op") != "D", tag_lang_udf(F.col("text")))
-    )

@@ -25,7 +25,6 @@ from pyspark.sql.types import (
 )
 
 from .text import extract_text, fingerprint64, quality_score, tag_lang, token_count
-from .url import normalize_url
 
 
 @F.pandas_udf(StringType())
@@ -36,11 +35,6 @@ def extract_text_udf(html: pd.Series) -> pd.Series:
 @F.pandas_udf(StringType())
 def tag_lang_udf(text: pd.Series) -> pd.Series:
     return text.map(tag_lang)
-
-
-@F.pandas_udf(StringType())
-def normalize_url_udf(url: pd.Series) -> pd.Series:
-    return url.map(normalize_url)
 
 
 @F.pandas_udf(IntegerType())

@@ -110,7 +110,7 @@ def normalize_url_simple(url: str | None) -> str | None:
     trimmed-but-unchanged.  The CDC oracle keys on THIS function so the
     engine's pure-JVM canonicalization and the oracle agree on every
     input, not just in-grammar ones.  Full-urllib canonicalization
-    remains available as ``canonicalize(mode="udf")``.
+    is :func:`normalize_url` (pure Python; the engine does not use it).
     """
     if url is None:
         return None

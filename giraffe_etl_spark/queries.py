@@ -173,8 +173,9 @@ def purchasers_without_errors(spark, sf_dir):
 def events_latest_per_user(spark, sf_dir):
     """Per-key latest-event collapse — the CDC dedup winner, as SQL.
 
-    Same plan shape as cdc.plan.dedup_winners: one groupBy with
-    max_by over the (ts, id) rank struct, map-side combined.
+    One groupBy with max_by over the (ts, id) rank struct, map-side
+    combined (the CDC apply picks its winners with the row_number()
+    formulation instead, cdc.plan.dedup_winners_window).
     """
     e = _t(spark, sf_dir, "events")
     payload = F.struct("event_id", "ts", "event_type", "value")

@@ -1,7 +1,7 @@
 """End-to-end CDC apply vs the pandas oracle (FIXTURES.md §5).
 
 Every test replays a deterministic change stream through the full
-distributed path (quarantine -> canonicalize -> dedup -> transforms ->
+distributed path (quarantine -> canonical url -> dedup -> transforms ->
 MERGE) and compares the final table to ``oracle_apply`` byte-for-byte
 on (url, warc_ts, text, lang) and exactly on html bytes.
 """
@@ -63,31 +63,57 @@ def test_single_batch_apply_matches_oracle(spark, applier):
     assert_matches_oracle(applier, pages, changes)
 
 
+# hot_key_threshold per dedup route.  The ids keep the names of the
+# dedup modes this matrix once compared; all three now run the one
+# window dedup, on the route each id selects:
+#   window     auto threshold: no key salts, the bucket-aligned exchange
+#   agg        pinned 20: only the stream's hot keys salt (the skew
+#              shape the aggregate dedup was kept for)
+#   rank_join  pinned 1: every sampled key salts, so keys whose latest
+#              event is invalid take the salted two-stage rank
+DEDUP_ROUTES = {"window": None, "agg": 20, "rank_join": 1}
+
+
 @pytest.mark.parametrize("dedup_mode", ["agg", "window", "rank_join"])
 @pytest.mark.parametrize("materialize", ["keys", "batch"])
 def test_apply_modes_match_oracle_with_malformed(
     spark, tmp_root, dedup_mode, materialize
 ):
-    """Every (dedup_mode x materialize) combo must match the oracle on a
-    stream with malformed rows.
+    """Every (plan source x dedup route) pair matches the oracle on a
+    stream with a quarter malformed rows.
 
-    Regression: in keys mode the cached planning ranks are a SUPERSET
-    (computed before op/ts/html validity); rank_join dedup must not use
-    them — a key whose max (warc_ts, lsn) event is invalid would join
-    zero valid rows and silently drop its valid events.
+    ``materialize`` picks where the skew plan comes from: ``batch`` is
+    the cold-start sample of the batch itself (one batch), ``keys`` is
+    the stored per-key profile (a first half teaches it, the second
+    half plans from it with no planning job).  Both are a validity
+    SUPERSET (the sample drops only null or empty urls): a key whose
+    max (warc_ts, lsn) event is invalid must still apply its best
+    VALID event, never vanish.
     """
     pages = gen_pages(30)
-    cfg = ChangeGenConfig(n_keys=30, malformed_frac=0.25)
+    cfg = ChangeGenConfig(n_keys=30, malformed_frac=0.25, hot_frac=0.5,
+                          n_hot_keys=3)
     changes = gen_changes(400, cfg)
     a = CdcApplier(
         spark,
         tmp_root + f"/{dedup_mode}_{materialize}",
         n_buckets=8,
-        dedup_mode=dedup_mode,
-        materialize=materialize,
+        hot_key_threshold=DEDUP_ROUTES[dedup_mode],
     )
     seed_pages(a.pages, spark.createDataFrame(pages))
-    a.apply_batch(spark_changes(spark, changes), batch_id=0)
+    if materialize == "batch":
+        res = a.apply_batch(spark_changes(spark, changes), batch_id=0)
+        assert res.phase_ms["plan_collect"] > 0  # the cold-start sample ran
+    else:
+        a.apply_batch(spark_changes(spark, changes.iloc[:200]), batch_id=0)
+        res = a.apply_batch(spark_changes(spark, changes.iloc[200:]), batch_id=1)
+        assert res.phase_ms["plan_collect"] == 0  # planned from the profile
+    if dedup_mode == "window":
+        assert res.hot_keys_detected == 0
+    elif dedup_mode == "agg":
+        assert 1 <= res.hot_keys_detected <= 3
+    else:
+        assert res.hot_keys_detected > 3
     assert_matches_oracle(a, pages, changes)
 
 
@@ -189,24 +215,6 @@ def test_url_canonicalization_merges_aliases(spark, applier):
     assert_matches_oracle(applier, gen_pages(0), rows)
 
 
-def test_window_dedup_mode_matches_agg(spark, tmp_root):
-    cfg = ChangeGenConfig(n_keys=50, hot_frac=0.5, n_hot_keys=3)
-    changes = gen_changes(500, cfg)
-    pages = gen_pages(50)
-    a = CdcApplier(spark, tmp_root + "/agg", n_buckets=8, dedup_mode="agg")
-    w = CdcApplier(
-        spark, tmp_root + "/win", n_buckets=8, dedup_mode="window", hot_key_threshold=20
-    )
-    for ap in (a, w):
-        seed_pages(ap.pages, spark.createDataFrame(pages))
-        ap.apply_batch(spark_changes(spark, changes), batch_id=0)
-    ta, tw = final_table(a), final_table(w)
-    pd.testing.assert_frame_equal(
-        ta.drop(columns=["html"]), tw.drop(columns=["html"])
-    )
-    assert_matches_oracle(a, pages, changes)
-
-
 def test_zipf_batch_engages_salted_path(spark, tmp_root):
     """A skewed batch must actually take the hot-key salted path.
 
@@ -217,9 +225,7 @@ def test_zipf_batch_engages_salted_path(spark, tmp_root):
     cfg = ChangeGenConfig(n_keys=50, hot_frac=0.5, n_hot_keys=3)
     changes = gen_changes(500, cfg)
     pages = gen_pages(50)
-    w = CdcApplier(
-        spark, tmp_root + "/win", n_buckets=8, dedup_mode="window", hot_key_threshold=20
-    )
+    w = CdcApplier(spark, tmp_root + "/win", n_buckets=8, hot_key_threshold=20)
     seed_pages(w.pages, spark.createDataFrame(pages))
     res = w.apply_batch(spark_changes(spark, changes), batch_id=0)
     assert res.hot_keys_detected >= 3, "salted path must engage on zipf skew"
@@ -235,7 +241,7 @@ def test_auto_threshold_engages_on_heavy_skew(spark, tmp_root):
     cfg = ChangeGenConfig(n_keys=200, hot_frac=0.6, n_hot_keys=1)
     changes = gen_changes(2000, cfg)
     pages = gen_pages(0)
-    w = CdcApplier(spark, tmp_root + "/auto", n_buckets=8, dedup_mode="window")
+    w = CdcApplier(spark, tmp_root + "/auto", n_buckets=8)
     seed_pages(
         w.pages,
         spark.createDataFrame(
@@ -263,57 +269,107 @@ def test_empty_limit0_batch_keys_mode(spark, tmp_root):
     assert_matches_oracle(a, pages, changes)
 
 
-def test_sampled_planning_matches_scan_planning(spark, tmp_root):
-    """planning='sample' and planning='scan' produce identical tables.
+def _oracle_winner_count(changes):
+    """Distinct canonical keys among the batch's valid events."""
+    from giraffe_etl_spark.cdc.oracle import validity_reason
+    from giraffe_etl_spark.functions.url import normalize_url_simple
 
-    The sampled path derives touched buckets from the commit and hot
-    keys from a Bernoulli sample; neither may change ANY answer — only
-    the number of passes over the batch.  Skew included: the pinned
-    threshold raises the sample fraction so the salted path engages in
-    both modes.
+    return len(
+        {
+            normalize_url_simple(r.url)
+            for r in changes.itertuples(index=False)
+            if validity_reason(r.op, r.url, r.warc_ts, r.html) is None
+        }
+    )
+
+
+def test_rows_winners_is_the_committed_delta_rows(spark, applier):
+    """rows_winners is read off the committed manifest diff (one delta
+    row per winner), on a batch with malformed rows and on a .limit(0)
+    batch whose plan collapses to an empty relation."""
+    pages = gen_pages(40)
+    changes = gen_changes(300, ChangeGenConfig(n_keys=40, malformed_frac=0.2))
+    seed_pages(applier.pages, spark.createDataFrame(pages))
+    res = applier.apply_batch(spark_changes(spark, changes), batch_id=0)
+    assert res.rows_quarantined > 0
+    want = _oracle_winner_count(changes)
+    assert res.rows_winners == sum(n for _, n in res.per_bucket) == want > 0
+    m = applier.metrics.read().toPandas()
+    assert int(m[m.stage == "winners"]["rows"].iloc[0]) == want
+
+    empty = spark_changes(spark, changes).limit(0)
+    res = applier.apply_batch(empty, batch_id=1)
+    assert res.rows_winners == sum(n for _, n in res.per_bucket) == 0
+    assert res.buckets_touched == 0 and not res.skipped
+    assert_matches_oracle(applier, pages, changes)
+
+
+def test_stream_properties_do_not_grow_with_batches(spark, applier):
+    """Every table property lands in every later snapshot's manifest,
+    so the offset log must be a FIXED key set per stream: the head's
+    stream.* keys after three batches are those after one."""
+    changes = gen_changes(300, ChangeGenConfig(n_keys=30))
+    keys = []
+    for b in range(3):
+        chunk = changes.iloc[100 * b : 100 * (b + 1)]
+        applier.apply_batch(spark_changes(spark, chunk), batch_id=b)
+        props = applier.pages.properties
+        keys.append(sorted(k for k in props if k.startswith("stream.")))
+    assert keys[0] == keys[1] == keys[2], keys
+
+
+def test_sampled_planning_matches_oracle(spark, tmp_root):
+    """Cold-start planning reads hot keys from a sample; touched
+    buckets and counts come from the commit.  Neither may change ANY
+    answer — only the number of passes over the batch.  Skew included:
+    the pinned threshold raises the sample fraction so the salted path
+    engages.
     """
     cfg = ChangeGenConfig(n_keys=50, hot_frac=0.5, n_hot_keys=3)
     changes = gen_changes(800, cfg)
     pages = gen_pages(50)
-    s = CdcApplier(
-        spark, tmp_root + "/scan", n_buckets=8, planning="scan",
-        hot_key_threshold=20,
-    )
-    p = CdcApplier(
-        spark, tmp_root + "/smp", n_buckets=8, planning="sample",
-        hot_key_threshold=20,
-    )
-    for ap in (s, p):
-        seed_pages(ap.pages, spark.createDataFrame(pages))
-        res = ap.apply_batch(spark_changes(spark, changes), batch_id=0)
-        assert res.rows_in == len(changes)  # exact in both modes
-        assert res.hot_keys_detected >= 3
-        assert res.buckets_touched > 0
-    pd.testing.assert_frame_equal(final_table(s), final_table(p))
+    p = CdcApplier(spark, tmp_root, n_buckets=8, hot_key_threshold=20)
+    seed_pages(p.pages, spark.createDataFrame(pages))
+    res = p.apply_batch(spark_changes(spark, changes), batch_id=0)
+    assert res.phase_ms["plan_collect"] > 0  # the cold-start sample ran
+    assert res.rows_in == len(changes)  # exact, from the merge job
+    assert res.hot_keys_detected >= 3
+    assert res.buckets_touched > 0
     assert_matches_oracle(p, pages, changes)
 
 
 @pytest.mark.parametrize("mode", ["range", "bernoulli"])
-def test_plan_sample_modes_match_oracle(spark, tmp_root, mode):
-    """Planning from an lsn-window sample (pushdown, O(sample) scan)
-    must produce the same final table as row-level Bernoulli sampling:
-    the sample feeds only heuristics (skew salting, size estimate),
-    never answers."""
+def test_plan_sample_modes_match_oracle(spark, tmp_root, mode, monkeypatch):
+    """The input picks the cold-start sample: an lsn window when the
+    batch carries its lsn_range (replay passes it; pushdown, O(sample)
+    scan), a row-level Bernoulli sample when it does not.  Both feed
+    only heuristics (skew salting, size estimate), never answers."""
     from giraffe_etl_spark.cdc.replay import replay
 
-    a = CdcApplier(
-        spark,
-        tmp_root,
-        n_buckets=8,
-        planning="sample",
-        plan_sample_mode=mode,
-        plan_sample=0.1,
-    )
+    monkeypatch.setattr(CdcApplier, "PLAN_SAMPLE", 0.1)
+    sampled = []
+    df_class = type(spark.range(1))
+    real_sample = df_class.sample
+
+    def spy(self, *args, **kwargs):
+        sampled.append(kwargs.get("fraction"))
+        return real_sample(self, *args, **kwargs)
+
+    monkeypatch.setattr(df_class, "sample", spy)
+    a = CdcApplier(spark, tmp_root, n_buckets=8)
     pages = gen_pages(40)
     cfg = ChangeGenConfig(n_keys=40, late_frac=0.1, dup_frac=0.05,
                           malformed_frac=0.05)
     seed_pages(a.pages, spark.createDataFrame(pages))
-    replay(a, spark, n_events=300, batch_size=100, cfg=cfg)
+    if mode == "range":
+        replay(a, spark, n_events=300, batch_size=100, cfg=cfg)
+        assert sampled == []
+    else:
+        changes = gen_changes(300, cfg)
+        for b in range(3):
+            chunk = changes.iloc[100 * b : 100 * (b + 1)]
+            a.apply_batch(spark_changes(spark, chunk), batch_id=b)
+        assert sampled == [0.1]  # the cold start only
     assert_matches_oracle(a, pages, gen_changes(300, cfg))
 
 
@@ -331,7 +387,7 @@ def test_quarantine_thread_is_joined_when_merge_fails(spark, tmp_root, monkeypat
     def boom(*args, **kwargs):
         raise RuntimeError("merge exploded")
 
-    monkeypatch.setattr(a, "_merge", boom)
+    monkeypatch.setattr(a, "_merge_mor", boom)
     with pytest.raises(RuntimeError, match="merge exploded"):
         a.apply_batch(spark_changes(spark, changes), batch_id=0)
     # joined-in-finally: the quarantine rows are already committed HERE,
@@ -350,7 +406,7 @@ def test_adaptive_steady_state_runs_zero_planning_jobs(spark, tmp_root):
     cfg = ChangeGenConfig(n_keys=40, late_frac=0.05, dup_frac=0.02,
                           malformed_frac=0.02)
     changes = gen_changes(400, cfg)
-    a = CdcApplier(spark, tmp_root, n_buckets=4, planning="adaptive")
+    a = CdcApplier(spark, tmp_root, n_buckets=4)
     seed_pages(a.pages, spark.createDataFrame(gen_pages(40)))
     r0 = a.apply_batch(spark_changes(spark, changes.iloc[:200]), batch_id=0)
     assert a._plan_stats is not None and a._plan_stats["n_valid"] > 0
@@ -368,9 +424,7 @@ def test_adaptive_salts_from_harvest_on_next_batch(spark, tmp_root):
     is batch 1 detecting WITH plan_collect == 0.)"""
     cfg = ChangeGenConfig(n_keys=50, hot_frac=0.5, n_hot_keys=3)
     changes = gen_changes(1000, cfg)
-    a = CdcApplier(
-        spark, tmp_root, n_buckets=8, planning="adaptive", hot_key_threshold=20
-    )
+    a = CdcApplier(spark, tmp_root, n_buckets=8, hot_key_threshold=20)
     seed_pages(a.pages, spark.createDataFrame(gen_pages(50)))
     a.apply_batch(spark_changes(spark, changes.iloc[:500]), batch_id=0)
     res = a.apply_batch(spark_changes(spark, changes.iloc[500:]), batch_id=1)
@@ -385,48 +439,43 @@ def test_adaptive_stats_survive_process_restart(spark, tmp_root):
     on its first batch)."""
     cfg = ChangeGenConfig(n_keys=30, dup_frac=0.05)
     changes = gen_changes(300, cfg)
-    a1 = CdcApplier(spark, tmp_root, n_buckets=4, planning="adaptive")
+    a1 = CdcApplier(spark, tmp_root, n_buckets=4)
     seed_pages(a1.pages, spark.createDataFrame(gen_pages(30)))
     a1.apply_batch(spark_changes(spark, changes.iloc[:100]), batch_id=0)
     a1.apply_batch(spark_changes(spark, changes.iloc[100:200]), batch_id=1)
 
-    a2 = CdcApplier(spark, tmp_root, n_buckets=4, planning="adaptive")
+    a2 = CdcApplier(spark, tmp_root, n_buckets=4)
     assert a2._plan_stats is not None, "stats must restore from the table"
     r = a2.apply_batch(spark_changes(spark, changes.iloc[200:]), batch_id=2)
     assert r.phase_ms["plan_collect"] == 0
     assert_matches_oracle(a2, gen_pages(30), changes)
 
 
-def test_adaptive_matches_scan_planning(spark, tmp_root):
-    """Adaptive planning may never change an answer — replay the same
-    skewed stream under planning='scan' and planning='adaptive' and
-    require identical final tables (the sampled-vs-scan equivalence
-    test, extended to the harvest path)."""
+def test_adaptive_planning_matches_oracle(spark, tmp_root, monkeypatch):
+    """Planning from harvested statistics may never change an answer:
+    a skewed replay whose later batches salt from the harvest (one
+    refresh mid-stream) matches the oracle."""
     from giraffe_etl_spark.cdc.replay import replay
 
+    monkeypatch.setattr(CdcApplier, "HARVEST_EVERY", 2)
     cfg = ChangeGenConfig(n_keys=50, hot_frac=0.5, n_hot_keys=3,
                           late_frac=0.1, dup_frac=0.05, malformed_frac=0.05)
-    s = CdcApplier(spark, tmp_root + "/scan", n_buckets=8, planning="scan",
-                   hot_key_threshold=20)
-    a = CdcApplier(spark, tmp_root + "/ada", n_buckets=8, planning="adaptive",
-                   hot_key_threshold=20)
-    for ap in (s, a):
-        seed_pages(ap.pages, spark.createDataFrame(gen_pages(50)))
-        replay(ap, spark, n_events=600, batch_size=200, cfg=cfg)
-    pd.testing.assert_frame_equal(final_table(s), final_table(a))
+    a = CdcApplier(spark, tmp_root, n_buckets=8, hot_key_threshold=20)
+    seed_pages(a.pages, spark.createDataFrame(gen_pages(50)))
+    replay(a, spark, n_events=600, batch_size=200, cfg=cfg)
+    assert a._plan_stats["age"] == 0  # batch 2 refreshed the profile
     assert_matches_oracle(a, gen_pages(50), gen_changes(600, cfg))
 
 
-def test_adaptive_harvest_refreshes_on_cadence(spark, tmp_root):
+def test_adaptive_harvest_refreshes_on_cadence(spark, tmp_root, monkeypatch):
     """The exact harvest is sampled in time: it runs only when the
-    cached profile's age reaches harvest_every, then resets it —
+    cached profile's age reaches HARVEST_EVERY, then resets it —
     steady-state batches in between carry zero harvest cost."""
     cfg = ChangeGenConfig(n_keys=20, dup_frac=0.05)
     changes = gen_changes(300, cfg)
-    a = CdcApplier(
-        spark, tmp_root, n_buckets=4, planning="adaptive",
-        plan_sample=0.5, harvest_every=2,
-    )
+    monkeypatch.setattr(CdcApplier, "PLAN_SAMPLE", 0.5)
+    monkeypatch.setattr(CdcApplier, "HARVEST_EVERY", 2)
+    a = CdcApplier(spark, tmp_root, n_buckets=4)
     seed_pages(a.pages, spark.createDataFrame(gen_pages(20)))
     a.apply_batch(spark_changes(spark, changes.iloc[:100]), batch_id=0)
     assert a._plan_stats["age"] == 0  # cold start seeded from the sample

@@ -26,9 +26,9 @@ from giraffe_etl_spark.cdc.plan import dedup_winners_window, tag_batch
 CHANGES_DDL = "lsn long, op string, url string, warc_ts timestamp, html binary"
 
 
-def _batch(spark, n, n_keys, start_lsn=0):
+def _rows(n, n_keys, start_lsn=0):
     """n upserts scattered uniformly over n_keys urls (hits every bucket)."""
-    rows = [
+    return [
         (
             start_lsn + i,
             "U",
@@ -38,7 +38,10 @@ def _batch(spark, n, n_keys, start_lsn=0):
         )
         for i in range(n)
     ]
-    return spark.createDataFrame(rows, CHANGES_DDL)
+
+
+def _batch(spark, n, n_keys, start_lsn=0):
+    return spark.createDataFrame(_rows(n, n_keys, start_lsn), CHANGES_DDL)
 
 
 def _file_bytes(entries):
@@ -51,11 +54,9 @@ def test_mor_commit_io_scales_with_batch_not_table(spark, tmp_root):
     Seeds 2000 pages, applies a 50-event uniform-key batch that touches
     every bucket.  MOR must (a) leave every base file untouched (same
     paths), and (b) add delta bytes that are a small fraction of the
-    table.  The cow path on the same input rewrites every touched
-    bucket — asserted as the contrast so the numbers stay honest.
+    table.
     """
-    mor_root = os.path.join(tmp_root, "mor")
-    ap = CdcApplier(spark, mor_root, n_buckets=8, merge_mode="mor")
+    ap = CdcApplier(spark, tmp_root, n_buckets=8)
     seed_pages(ap.pages, spark.createDataFrame(gen_pages(2000)))
     before = ap.pages.current_snapshot()
     base_paths = {fi["path"] for fs in before.buckets.values() for fi in fs}
@@ -68,23 +69,6 @@ def test_mor_commit_io_scales_with_batch_not_table(spark, tmp_root):
     assert delta_bytes > 0
     assert delta_bytes < 0.10 * base_bytes, (delta_bytes, base_bytes)
 
-    # contrast: cow rewrites the touched buckets wholesale
-    cow_root = os.path.join(tmp_root, "cow")
-    ap2 = CdcApplier(spark, cow_root, n_buckets=8, merge_mode="cow")
-    seed_pages(ap2.pages, spark.createDataFrame(gen_pages(2000)))
-    snap0 = ap2.pages.current_snapshot()
-    ap2.apply_batch(_batch(spark, 50, n_keys=50), batch_id=0)
-    snap1 = ap2.pages.current_snapshot()
-    rewritten = _file_bytes(
-        [
-            fi
-            for b, fs in snap1.buckets.items()
-            for fi in fs
-            if fi["path"] not in {x["path"] for x in snap0.buckets.get(b, [])}
-        ]
-    )
-    assert rewritten > 0.5 * base_bytes, (rewritten, base_bytes)
-
 
 def test_mor_merge_subtree_single_exchange(spark, tmp_root):
     """The full MOR merge frame plans exactly ONE shuffle exchange.
@@ -96,7 +80,7 @@ def test_mor_merge_subtree_single_exchange(spark, tmp_root):
 
     from tests.test_plans import n_exchanges, plan_of
 
-    ap = CdcApplier(spark, tmp_root, n_buckets=32, merge_mode="mor")
+    ap = CdcApplier(spark, tmp_root, n_buckets=32)
     seed_pages(ap.pages, spark.createDataFrame(gen_pages(50)))
     changes = _batch(spark, 40, n_keys=20)
     tagged = tag_batch(changes, exprs=ap._exprs)
@@ -143,7 +127,7 @@ def test_aligned_write_runs_one_task_per_slot(spark, tmp_root):
 
     from giraffe_etl_spark.cdc.generate import ChangeGenConfig, gen_changes
 
-    ap = CdcApplier(spark, tmp_root, n_buckets=32, merge_mode="mor")
+    ap = CdcApplier(spark, tmp_root, n_buckets=32)
     pages = gen_pages(200)
     seed_pages(ap.pages, spark.createDataFrame(pages))
     changes = gen_changes(400, ChangeGenConfig(n_keys=200))
@@ -159,40 +143,84 @@ def test_aligned_write_runs_one_task_per_slot(spark, tmp_root):
     assert_matches_oracle(ap, pages, changes)
 
 
-def test_mor_apply_matches_cow_apply(spark, tmp_root):
-    """Same batches through both merge modes -> identical public table."""
-    frames = {}
-    for mode in ("mor", "cow"):
-        root = os.path.join(tmp_root, mode)
-        ap = CdcApplier(spark, root, n_buckets=8, merge_mode=mode)
-        seed_pages(ap.pages, spark.createDataFrame(gen_pages(60)))
-        for b in range(3):
-            ap.apply_batch(_batch(spark, 40, n_keys=30, start_lsn=100 * b), batch_id=b)
-        # a late delete + a late (losing) insert
-        late = spark.createDataFrame(
-            [
-                (900, "D", "http://host0.example.org/page/0",
-                 dt.datetime(2026, 1, 1), None),
-                (901, "I", "http://host1.example.org/page/1",
-                 dt.datetime(2020, 1, 1), b"<p>too old</p>"),
-            ],
-            CHANGES_DDL,
-        )
-        ap.apply_batch(late, batch_id=3)
-        frames[mode] = (
-            read_pages(ap.pages)
-            .select("url", "warc_ts", "text", "lang")
-            .orderBy("url")
-            .toPandas()
-        )
-    assert frames["mor"].equals(frames["cow"])
+@pytest.mark.parametrize("salted,want_tasks", [(False, 28), (True, 60)])
+def test_warm_batch_job_and_task_count(spark, tmp_root, salted, want_tasks):
+    """A warm batch (planned from the harvested profile, no planning
+    job) runs a pinned number of Spark jobs and tasks, unsalted and
+    salted, on the 8-slot session.  An extra job, or a stage that
+    splits into more tasks (each Python-UDF task pays worker set-up),
+    fails here whatever the host's timing noise."""
+    from tests.test_cdc_apply import spark_changes
+
+    from giraffe_etl_spark.cdc.generate import ChangeGenConfig, gen_changes
+
+    cfg = ChangeGenConfig(
+        n_keys=50, hot_frac=0.5 if salted else 0.0, n_hot_keys=3,
+        malformed_frac=0.05,
+    )
+    changes = gen_changes(600, cfg)
+    ap = CdcApplier(
+        spark, tmp_root, n_buckets=32, hot_key_threshold=20 if salted else None
+    )
+    seed_pages(ap.pages, spark.createDataFrame(gen_pages(50)))
+    ap.apply_batch(spark_changes(spark, changes.iloc[:300]), batch_id=0)
+    batch = spark_changes(spark, changes.iloc[300:])
+    st = spark.sparkContext.statusTracker()
+    mark = max(st.getJobIdsForGroup(None), default=-1)
+    res = ap.apply_batch(batch, batch_id=1)
+    jobs = [j for j in st.getJobIdsForGroup(None) if j > mark]
+    tasks = sum(
+        st.getStageInfo(s).numCompletedTasks
+        for j in jobs
+        for s in st.getJobInfo(j).stageIds
+    )
+
+    assert res.phase_ms["plan_collect"] == 0
+    assert (res.hot_keys_detected >= 3) == salted
+    assert res.rows_quarantined > 0
+    # the merge write + the concurrent quarantine append, nothing else
+    assert len(jobs) == 2, jobs
+    assert tasks == want_tasks
+
+
+def test_mor_apply_matches_oracle(spark, tmp_root):
+    """Three upsert batches, then a late delete (newest event, wins)
+    and a late insert (oldest event, loses) -> the oracle's table."""
+    import pandas as pd
+
+    from tests.test_cdc_apply import assert_matches_oracle
+
+    from giraffe_etl_spark.cdc.oracle import oracle_apply
+
+    ap = CdcApplier(spark, tmp_root, n_buckets=8)
+    pages = gen_pages(60)
+    seed_pages(ap.pages, spark.createDataFrame(pages))
+    batches = [_rows(40, n_keys=30, start_lsn=100 * b) for b in range(3)]
+    batches.append(
+        [
+            (900, "D", "http://host0.example.org/page/0",
+             dt.datetime(2026, 1, 1), None),
+            (901, "I", "http://host1.example.org/page/1",
+             dt.datetime(2020, 1, 1), b"<p>too old</p>"),
+        ]
+    )
+    for b, rows in enumerate(batches):
+        ap.apply_batch(spark.createDataFrame(rows, CHANGES_DDL), batch_id=b)
+    changes = pd.DataFrame(
+        [r for rows in batches for r in rows],
+        columns=["lsn", "op", "url", "warc_ts", "html"],
+    )
+    want = oracle_apply(pages, changes)
+    assert "http://host0.example.org/page/0" not in set(want["url"])
+    assert "too old" not in set(want["text"])
+    assert_matches_oracle(ap, pages, changes)
 
 
 def test_reconcile_read_shuffles_only_dirty_buckets(spark, tmp_root):
     """Buckets without deltas stream through the read with no exchange."""
     from tests.test_plans import n_exchanges, plan_of
 
-    ap = CdcApplier(spark, tmp_root, n_buckets=8, merge_mode="mor")
+    ap = CdcApplier(spark, tmp_root, n_buckets=8)
     seed_pages(ap.pages, spark.createDataFrame(gen_pages(200)))
     # clean table: zero exchanges
     assert n_exchanges(plan_of(ap.pages.read())) == 0
@@ -204,9 +232,7 @@ def test_reconcile_read_shuffles_only_dirty_buckets(spark, tmp_root):
 
 
 def test_mor_auto_compaction_bounds_delta_files(spark, tmp_root):
-    ap = CdcApplier(
-        spark, tmp_root, n_buckets=4, merge_mode="mor", compact_threshold=3
-    )
+    ap = CdcApplier(spark, tmp_root, n_buckets=4, compact_threshold=3)
     seed_pages(ap.pages, spark.createDataFrame(gen_pages(40)))
     for b in range(6):
         ap.apply_batch(_batch(spark, 20, n_keys=10, start_lsn=100 * b), batch_id=b)
@@ -223,7 +249,7 @@ def test_mor_auto_compaction_bounds_delta_files(spark, tmp_root):
 
 
 def test_compact_tombstones_rewrites_only_affected_buckets(spark, tmp_root):
-    ap = CdcApplier(spark, tmp_root, n_buckets=8, merge_mode="mor")
+    ap = CdcApplier(spark, tmp_root, n_buckets=8)
     seed_pages(ap.pages, spark.createDataFrame(gen_pages(200)))
     # tombstone exactly one key (one bucket), with an OLD event time
     one = spark.createDataFrame(
@@ -246,7 +272,7 @@ def test_compact_tombstones_rewrites_only_affected_buckets(spark, tmp_root):
 
 
 def test_mor_exactly_once_replay_and_resume(spark, tmp_root):
-    ap = CdcApplier(spark, tmp_root, n_buckets=8, merge_mode="mor")
+    ap = CdcApplier(spark, tmp_root, n_buckets=8)
     seed_pages(ap.pages, spark.createDataFrame(gen_pages(30)))
     b0 = _batch(spark, 20, n_keys=10)
     ap.apply_batch(b0, batch_id=0)
@@ -255,7 +281,7 @@ def test_mor_exactly_once_replay_and_resume(spark, tmp_root):
     res = ap.apply_batch(b0, batch_id=0)
     assert res.skipped
     # a fresh applier over the same root resumes and also no-ops
-    ap2 = CdcApplier(spark, tmp_root, n_buckets=8, merge_mode="mor")
+    ap2 = CdcApplier(spark, tmp_root, n_buckets=8)
     assert ap2.last_committed_batch() == 0
     res = ap2.apply_batch(b0, batch_id=0)
     assert res.skipped
@@ -266,7 +292,7 @@ def test_mor_exactly_once_replay_and_resume(spark, tmp_root):
 def test_mor_schema_evolution_across_delta_boundary(spark, tmp_root):
     """Add a column mid-stream: old base + old deltas read as null,
     new deltas carry the value; reconcile spans all three vintages."""
-    ap = CdcApplier(spark, tmp_root, n_buckets=4, merge_mode="mor")
+    ap = CdcApplier(spark, tmp_root, n_buckets=4)
     seed_pages(ap.pages, spark.createDataFrame(gen_pages(20)))
     ap.apply_batch(_batch(spark, 10, n_keys=5), batch_id=0)
     ap.pages.add_column("fetch_ms", "int")

@@ -55,16 +55,16 @@ def test_q6_filter_pushdown_and_column_pruning(spark):
     assert "l_comment" not in read_schema and "l_orderkey" not in read_schema
 
 
-def test_cdc_planning_scan_never_reads_payload(spark):
-    """The keys-mode planning aggregate must not scan the html column.
+def test_cdc_planning_scan_never_reads_payload(spark, tmp_root):
+    """The cold-start planning aggregate must not scan the html column.
 
-    This is the 'keys' materialization contract (cdc/apply.py): the
-    planning pass prunes to (url, warc_ts, lsn) so a 10^8-event batch
-    of ~50 KB pages plans against KBs per row, not the payload.
+    The applier never caches the batch: its plan sample prunes to
+    (url, warc_ts, lsn) at most, so a 10^8-event batch of ~50 KB pages plans
+    against bytes per row, not the payload.  Both sample shapes are
+    checked: the lsn window (which must also reach the parquet reader
+    as a pushed filter) and the Bernoulli sample.
     """
-    from pyspark.sql import functions as F
-
-    from giraffe_etl_spark.cdc.plan import batch_exprs, key_stats
+    from giraffe_etl_spark.cdc.apply import CdcApplier
 
     # a real parquet file so the scan node is a genuine
     # FileSourceScan with pruning (an in-memory LocalRelation would
@@ -73,19 +73,18 @@ def test_cdc_planning_scan_never_reads_payload(spark):
         [(1, "U", "http://a.example.org/x", None, b"<p>big payload</p>")],
         "lsn long, op string, url string, warc_ts timestamp, html binary",
     )
-    path = "/tmp/_plan_probe_changes"
+    path = f"{tmp_root}/changes"
     log.write.mode("overwrite").parquet(path)
     src = spark.read.parquet(path)
-    exprs = batch_exprs("expr")
-    keys = key_stats(
-        src.select("url", "warc_ts", "lsn")
-        .filter(F.col("url").isNotNull())
-        .withColumn("url", exprs[1])
-    )
-    plan = plan_of(keys)
-    read_schema = plan.split("ReadSchema:")[1].splitlines()[0]
-    assert "html" not in read_schema, read_schema
-    assert "url" in read_schema and "lsn" in read_schema
+    applier = CdcApplier(spark, f"{tmp_root}/lake", n_buckets=4)
+    for lsn_range in ((0, 999), None):
+        agg, _ = applier._sample_stats(src, 0, lsn_range)
+        plan = plan_of(agg)
+        read_schema = plan.split("ReadSchema:")[1].splitlines()[0]
+        assert "html" not in read_schema, read_schema
+        assert "url" in read_schema, read_schema
+        pushed = plan.split("PushedFilters:")[1].split("]")[0]
+        assert ("lsn" in pushed) == (lsn_range is not None), pushed
 
 
 # ---- join strategy ----------------------------------------------------------
@@ -149,8 +148,9 @@ def test_aligned_apply_single_payload_exchange(spark, tmp_root):
     valid = tagged.filter(F.col("_reason").isNull()).drop("_reason")
     valid = valid.repartition(applier.pages.aligned_partitions(), F.col("url"))
     # the real pipeline fuses the pandas-UDF transform chain AFTER the
-    # merge join (apply.py): a pandas UDF here would break partitioning
-    # propagation and force a redundant winner-payload exchange
+    # last exchange (apply.py): a pandas UDF here would break
+    # partitioning propagation and force a redundant winner-payload
+    # exchange
     winners = dedup_winners_window(valid)
     snap = applier.pages.current_snapshot()
     target = applier.pages.read(snap=snap, with_bucket_col=True)

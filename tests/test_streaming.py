@@ -137,7 +137,7 @@ def test_stream_killed_mid_epoch_between_commits_resumes(spark, roots):
     point the watermark design claims to survive) — restart from the
     same checkpoint, and prove convergence to the oracle.
 
-    Injection: the applier's _merge raises on its second epoch.  The
+    Injection: the applier's _merge_mor raises on its second epoch.  The
     quarantine route runs on a concurrent thread and is joined in
     apply_batch's finally, so by the time the failure surfaces the
     quarantine table HAS committed batch 1 while pages has not —
@@ -157,15 +157,15 @@ def test_stream_killed_mid_epoch_between_commits_resumes(spark, roots):
     a1 = CdcApplier(spark, table_root, n_buckets=4)
     seed_pages(a1.pages, spark.createDataFrame(gen_pages(n_pages)))
 
-    real_merge = a1._merge
+    real_merge = a1._merge_mor
     boom = RuntimeError("injected mid-epoch crash")
 
-    def failing_merge(staged, batch_id, lsn_range, phases, **kw):
+    def failing_merge(winners, batch_id, *args, **kw):
         if batch_id == 1:
             raise boom
-        return real_merge(staged, batch_id, lsn_range, phases, **kw)
+        return real_merge(winners, batch_id, *args, **kw)
 
-    a1._merge = failing_merge
+    a1._merge_mor = failing_merge
     q1 = start_apply_stream(
         read_change_stream(spark, src_dir, max_files_per_trigger=1), a1, ckpt
     )

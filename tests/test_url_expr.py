@@ -103,31 +103,44 @@ def test_expr_idempotent(spark):
         assert r["u1"] == r["u2"]
 
 
-def test_rank_join_dedup_matches_agg(spark):
-    """rank_join and agg dedup agree, incl. equal-warc_ts LSN tiebreak."""
+def test_window_dedup_lsn_tiebreak_matches_oracle(spark):
+    """The engine's dedup picks the oracle's winners, incl. the
+    within-batch equal-warc_ts LSN tiebreak."""
     import datetime as dt
 
-    from giraffe_etl_spark.cdc.plan import dedup_winners, dedup_winners_rank_join
+    import pandas as pd
+
+    from giraffe_etl_spark.cdc.oracle import oracle_apply
+    from giraffe_etl_spark.cdc.plan import dedup_winners_window
+    from giraffe_etl_spark.functions.url import normalize_url_simple
 
     t = dt.datetime(2024, 1, 1)
     t2 = dt.datetime(2024, 1, 2)
     rows = [
-        (1, "I", "http://a/", t, b"v1"),
-        (2, "U", "http://a/", t, b"v2"),   # same ts, higher lsn wins
-        (3, "U", "http://b/", t2, b"v3"),
-        (4, "U", "http://b/", t, b"v4"),   # older ts loses despite lsn
-        (5, "D", "http://c/", t, None),
+        (1, "I", "http://a.org/", t, b"v1"),
+        (2, "U", "http://a.org/", t, b"v2"),   # same ts, higher lsn wins
+        (3, "U", "http://b.org/", t2, b"v3"),
+        (4, "U", "http://b.org/", t, b"v4"),   # older ts loses despite lsn
+        (5, "D", "http://c.org/", t, None),
     ]
+    cols = ["lsn", "op", "url", "warc_ts", "html"]
+    # already canonical: the dedup keys on the url column as given
+    assert all(normalize_url_simple(r[2]) == r[2] for r in rows)
     df = spark.createDataFrame(
         rows, "lsn long, op string, url string, warc_ts timestamp, html binary"
     )
-    a = {r["url"]: (r["lsn"], r["op"]) for r in dedup_winners(df).collect()}
-    b = {r["url"]: (r["lsn"], r["op"]) for r in dedup_winners_rank_join(df).collect()}
-    assert a == b == {
-        "http://a/": (2, "U"),
-        "http://b/": (3, "U"),
-        "http://c/": (5, "D"),
+    got = dedup_winners_window(df).collect()
+    assert {r["url"]: (r["lsn"], r["op"]) for r in got} == {
+        "http://a.org/": (2, "U"),
+        "http://b.org/": (3, "U"),
+        "http://c.org/": (5, "D"),
     }
+    want = oracle_apply(
+        pd.DataFrame(columns=["url", "warc_ts", "html", "text", "lang"]),
+        pd.DataFrame(rows, columns=cols),
+    )
+    live = {r["url"]: bytes(r["html"]) for r in got if r["op"] != "D"}
+    assert live == dict(zip(want["url"], want["html"]))
 
 
 def _fast_canonical_py(u: str) -> bool:
