@@ -7,8 +7,8 @@ error routing, key-based memoized (idempotent) apply, resumable
 checkpoints, per-node metrics — re-expressed Spark-first:
 
 - change batches are DataFrames; the apply stage is a key-partitioned
-  dedup-then-MERGE (a row_number() window over the bucket-aligned
-  exchange, hot keys salted),
+  dedup-then-MERGE over one bucket-aligned exchange (a row_number()
+  window; hot keys detected -> one map-side-combined max_by aggregate),
 - per-record transform chains are vectorized pandas/Arrow UDFs,
 - error routes are quarantine table writes,
 - the BDB state store is a snapshot-isolated lake table (``lake.Table``)
@@ -19,7 +19,7 @@ Layout:
     lake/       snapshot-isolated bucketed parquet table (Iceberg-style
                 semantics: atomic commits, MERGE, schema ids, properties)
     functions/  pure transform library + pandas_udf wrappers
-    cdc/        generators, dedup/salting planner, batch apply, replay,
+    cdc/        generators, skew planner + dedup, batch apply, replay,
                 pandas oracle
     operators/  dedup (exact/minhash/simhash/jaccard), similarity (ANN),
                 text stats, multimodal plumbing

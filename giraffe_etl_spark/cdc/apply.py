@@ -29,13 +29,20 @@ from __future__ import annotations
 import os
 import threading
 import time
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 from pyspark.sql.types import StructType
 
 from ..lake import Table
-from .plan import batch_exprs, dedup_winners_window, key_stats_two_level, tag_batch
+from .plan import (
+    batch_exprs,
+    dedup_winners_agg,
+    dedup_winners_window,
+    key_stats_two_level,
+    tag_batch,
+)
 
 PAGES_PUBLIC = "url string, warc_ts timestamp, html binary, text string, lang string"
 # minimum per-key event count for a key to enter the hot-key candidate
@@ -67,6 +74,63 @@ def _top_keys(keep) -> F.Column:
         1,
         64,
     )
+
+
+# Active conf pins of every applier in the process: (JVM session, key)
+# -> [pinned value, value to restore, holder thread ids].
+_PINS: dict[tuple, list] = {}
+_PINS_CHANGED = threading.Condition()
+
+
+def _pin_free(key: tuple, value: str) -> bool:
+    pin = _PINS.get(key)
+    if pin is None or pin[0] == value:
+        return True
+    if threading.get_ident() in pin[2]:
+        # waiting would wait on ourselves
+        raise RuntimeError(f"{key[1]} is already pinned to {pin[0]} here")
+    return False
+
+
+@contextmanager
+def _conf_pinned(spark: SparkSession, updates: dict[str, str]):
+    """Set session conf keys for the block, then restore (or unset) them.
+
+    Safe to overlap across threads: a key already pinned to the SAME
+    value in this session is shared, and its last holder restores the
+    value from before the first pin; a DIFFERENT value waits until the
+    key is free, so no pinned block ever plans under another block's
+    value.  Nesting a different value on one thread raises.
+
+    Session-global: an unpinned query planned concurrently in the same
+    session sees the pinned values (see ``adaptive`` in
+    CdcApplier.__init__).
+    """
+    keys = {(spark._jsparkSession, k): v for k, v in updates.items()}
+    me = threading.get_ident()
+    with _PINS_CHANGED:
+        _PINS_CHANGED.wait_for(
+            lambda: all(_pin_free(key, v) for key, v in keys.items())
+        )
+        for key, v in keys.items():
+            if key not in _PINS:
+                _PINS[key] = [v, spark.conf.get(key[1], None), []]
+                spark.conf.set(key[1], v)
+            _PINS[key][2].append(me)
+    try:
+        yield
+    finally:
+        with _PINS_CHANGED:
+            for key in keys:
+                pin = _PINS[key]
+                pin[2].remove(me)
+                if not pin[2]:
+                    del _PINS[key]
+                    if pin[1] is None:
+                        spark.conf.unset(key[1])
+                    else:
+                        spark.conf.set(key[1], pin[1])
+            _PINS_CHANGED.notify_all()
 
 
 def pages_internal_schema(extra: str = "") -> StructType:
@@ -172,7 +236,7 @@ class ApplyResult:
     wall_ms: int = 0
     per_bucket: list = field(default_factory=list)  # (bucket, rows_applied)
     phase_ms: dict = field(default_factory=dict)  # stage -> wall ms
-    hot_keys_detected: int = 0  # keys above the salting threshold
+    hot_keys_detected: int = 0  # keys above the hot-key threshold
 
 
 class CdcApplier:
@@ -195,11 +259,13 @@ class CdcApplier:
     columns, the merge reads payload once) beats materializing it
     cluster-wide — the same trade Iceberg's own MERGE planning makes.
 
-    ``hot_key_threshold``: events-per-key above which a key is salted
-    in the dedup.  ``None`` (default) = auto — 4x the mean
-    events-per-shuffle-partition, floor 64 (see
-    ``_resolve_hot_threshold``); ``0`` disables salting; an int pins
-    the threshold.
+    ``hot_key_threshold``: events-per-key above which a key is hot.
+    A batch with any hot key dedups with one map-side-combined
+    aggregate instead of the window (see ``_dedup``).  ``None``
+    (default) = auto — 4x the mean events-per-shuffle-partition, floor
+    64 (see ``_resolve_hot_threshold``); ``0`` disables hot-key
+    detection, so every batch takes the window; an int pins the
+    threshold.
     """
 
     # Cold-start plan sample: the fraction of the batch the first
@@ -213,8 +279,8 @@ class CdcApplier:
     # in TIME: steady-state batches plan from the cached profile at zero
     # cost and at most 1/HARVEST_EVERY of batches pay the refresh.
     # Skew-drift detection latency is bounded by HARVEST_EVERY batches;
-    # a drifted profile costs only un-salted (correct, slower) batches
-    # in that window.
+    # a drifted profile costs only window-dedup (correct, slower)
+    # batches in that window.
     HARVEST_EVERY = 8
 
     def __init__(
@@ -232,7 +298,8 @@ class CdcApplier:
         self.maintenance = maintenance
         # AQE has nothing to decide on the apply path — partition counts
         # are pinned (the aligned exchange MUST divide n_buckets),
-        # skew is handled by explicit salting, and the broadcast-size
+        # skew is handled by the map-side-combined dedup chosen from the
+        # detected hot keys, and the broadcast-size
         # call is made from static parquet stats.  What AQE does add is
         # stage-by-stage scheduling + replanning latency: measured 7.4s
         # -> 3.8s fixed cost per warm batch at local[4] with it off.
@@ -242,11 +309,13 @@ class CdcApplier:
         # session-global spark.sql.adaptive.enabled for the duration of
         # apply_batch — any query planned CONCURRENTLY in the same
         # SparkSession (e.g. user jobs alongside foreachBatch) silently
-        # plans with AQE off, and two appliers sharing a session can
-        # clobber each other's saved value.  When the applier shares a
-        # session with other work, either pass adaptive=None (leave the
-        # session setting alone) or give the applier its own
-        # ``spark.newSession()`` (separate conf, shared cluster).
+        # plans with AQE off.  Appliers sharing a session do not clobber
+        # each other's saved value (``_conf_pinned`` counts holders), but
+        # two that pin different values take turns, one batch at a
+        # time.  When the applier shares a session with other work,
+        # either pass adaptive=None (leave the session setting alone) or
+        # give the applier its own ``spark.newSession()`` (separate
+        # conf, shared cluster).
         self.adaptive = adaptive
         self.spark = spark
         self.root = root
@@ -356,21 +425,13 @@ class CdcApplier:
         pinned: dict[str, str] = {}
         if self.adaptive is not None:
             pinned["spark.sql.adaptive.enabled"] = str(bool(self.adaptive)).lower()
-        saved = {k: self.spark.conf.get(k, None) for k in pinned}
-        for k, v in pinned.items():
-            self.spark.conf.set(k, v)
         try:
-            return self._apply_batch_inner(changes, batch_id, lsn_range, t0)
+            with _conf_pinned(self.spark, pinned):
+                return self._apply_batch_inner(changes, batch_id, lsn_range, t0)
         except BatchRaced:
             # a concurrent applier won the commit race with this very
             # batch id — exactly-once means our copy must not land
             return ApplyResult(batch_id=batch_id, skipped=True)
-        finally:
-            for k, v in saved.items():
-                if v is None:
-                    self.spark.conf.unset(k)
-                else:
-                    self.spark.conf.set(k, v)
 
     def _watermark_guard(self, batch_id: int):
         """Abort a commit retry if the fresh snapshot covers batch_id."""
@@ -406,8 +467,8 @@ class CdcApplier:
         try:
             n_valid, hot_candidates = self._plan(changes, batch_id, lsn_range, phases)
             phases["plan"] = int((time.monotonic() - t_p) * 1000)
-            winners, n_hot, aligned, obs_h = self._dedup(valid, n_valid, hot_candidates)
-            result = self._merge_mor(winners, batch_id, lsn_range, phases, aligned)
+            winners, n_hot, obs_h = self._dedup(valid, n_valid, hot_candidates)
+            result = self._merge_mor(winners, batch_id, lsn_range, phases)
         finally:
             # join even when the merge raises (BatchRaced, write
             # error): a daemon quarantine thread left running would
@@ -422,13 +483,7 @@ class CdcApplier:
         # planning/merge jobs, so it is NOT additive with the other
         # phases
         phases["quarantine"] = q_box.get("ms", 0)
-        # Observation.get asserts when the optimizer collapsed the
-        # batch to an empty LocalRelation (e.g. a .limit(0) source) and
-        # the observe node never ran
-        try:
-            n_changes = int(obs_v.get["n_valid"]) + n_quar
-        except Exception:
-            n_changes = n_quar
+        n_changes = int(obs_v.get["n_valid"]) + n_quar
         if obs_h is not None:
             self._fold_harvest(obs_h)
         result.rows_in = n_changes
@@ -529,7 +584,7 @@ class CdcApplier:
         scale-invariant across batch sizes.  This is the micro-batch
         analog of AQE's runtime statistics reuse: a CDC stream is
         stationary at batch granularity, so the last profile is the
-        right prior, and a drifted profile costs at most un-salted
+        right prior, and a drifted profile costs at most window-dedup
         (correct, just slower) batches before the harvest catches up.
         The profile persists in the table's snapshot properties, so a
         resumed process plans warm.
@@ -548,9 +603,10 @@ class CdcApplier:
           so the window predicate pushes down to parquet row-group
           statistics and the scan reads ~frac of the SEGMENTS — the
           sample job is O(sample), not O(batch).  A key hot ONLY in a
-          burst outside the window is missed (it stays unsalted —
-          slower reducer, never wrong); the valid-count estimate is
-          near-exact because lsn density per event is constant.
+          burst outside the window is missed (the batch takes the
+          window dedup — slower reducer, never wrong); the valid-count
+          estimate is near-exact because lsn density per event is
+          constant.
         - without one: a row-level Bernoulli sample — unbiased, but the
           predicate runs post-scan, so the job still reads the batch's
           (url, warc_ts, lsn) columns in full.
@@ -594,7 +650,7 @@ class CdcApplier:
         One output row: ``tot`` (sampled valid-ish events: the scan
         prunes to (url, warc_ts, lsn) and never reads the payload, so
         only null/empty urls are dropped) and ``top`` (the largest
-        sampled keys, canonicalized so the salting isin matches the
+        sampled keys, canonicalized so they compare equal to the
         deduped url column).
         """
         frac = self._plan_fraction()
@@ -652,7 +708,7 @@ class CdcApplier:
 
         A key is "hot" when its event count would dominate one reducer:
         4x the average events-per-shuffle-partition (floor 64 so small
-        test batches never salt).  Pass an int to pin, 0/None via
+        test batches never count as skewed).  Pass an int to pin, 0 via
         ``hot_key_threshold=0`` to disable.
         """
         if self.hot_key_threshold is not None:
@@ -664,64 +720,59 @@ class CdcApplier:
 
     def _dedup(
         self, valid: DataFrame, n_valid: int, hot_candidates: list
-    ) -> tuple[DataFrame, int, bool, Observation | None]:
-        """The winning event per url: max (warc_ts, lsn), row_number().
+    ) -> tuple[DataFrame, int, Observation | None]:
+        """The winning event per url: max (warc_ts, lsn).
 
-        Returns (winners, hot keys salted, aligned, harvest
-        observation or None).  ``aligned``: the winners sit on the
-        bucket-aligned exchange, so the write needs no clustering
-        exchange of its own.
+        Returns (winners, hot keys detected, harvest observation or
+        None).  Both formulations leave the winners on ONE bucket-
+        aligned exchange of P partitions (``Table.aligned_partitions``,
+        the smallest divisor of the bucket count N that fills every
+        core): pmod(murmur3(url), N) mod P = pmod(murmur3(url), P), so
+        every bucket lands whole in one task, and the write reuses the
+        exchange as its clustering (one delta file per touched bucket,
+        no exchange of its own).  P is one task per core, not one per
+        bucket, because every task of this stage starts a Python worker
+        for the fused UDF (see BASELINE.md).
+
+        - No hot key detected: the row_number() window over an explicit
+          ``repartition(P, url)`` (plan-locked by
+          test_mor_merge_subtree_single_exchange).  The window streams
+          each key's sorted rows and keeps the top one.
+        - Hot keys detected: one map-side-combined ``max_by`` aggregate.
+          Its partial aggregate collapses each hot key to one row per
+          map task before the exchange, where the window would send a
+          hot key's every event, payload included, to one reducer.  Its
+          exchange is ``hashpartitioning(url, spark.sql.shuffle.
+          partitions)``, pinned to P for the merge write by
+          ``_merge_mor`` (plan-locked by
+          test_mor_skewed_merge_subtree_single_exchange, and by
+          test_skewed_write_aligned_when_session_partitions_differ).
+          Without hot keys the window beat a forced aggregate 2 of 2
+          pairs on the bulk shape; on trickle-serve the pair was split
+          (BASELINE.md).  The choice is made per batch from the skew
+          plan, never by configuration.
         """
         threshold = self._resolve_hot_threshold(n_valid)
         hot_list = []
         if threshold:
             hot_list = [url for ev, url in hot_candidates if ev > threshold]
-        aligned = not hot_list
-        if aligned:
-            # bucket-aligned exchange: repartitioning on url into P
-            # partitions, P a divisor of the bucket count N, puts every
-            # bucket whole into ONE task
-            # (pmod(murmur3(url), N) mod P = pmod(murmur3(url), P)), so
-            # the window dedup AND the bucketed write reuse this ONE
-            # payload exchange, and the write still emits one file per
-            # touched bucket.  P is one task per core, not one per
-            # bucket: every task of this stage starts a Python worker
-            # for the fused UDF, and that set-up cost is paid per task
-            # (see Table.aligned_partitions and BASELINE.md).  This is
-            # the ONLY exchange in the whole merge subtree (plan-locked
-            # by test_mor_merge_subtree_single_exchange).  The salted
-            # hot-key path re-exchanges subsets and loses the
-            # alignment, so it keeps the write's own clustering.
-            valid = valid.repartition(self.pages.aligned_partitions(), F.col("url"))
         harvest = (
             self._plan_stats is not None
             and int(self._plan_stats.get("age", 0)) >= self.HARVEST_EVERY
         )
-        winners = dedup_winners_window(
-            valid, hot_keys=hot_list or None, with_counts=harvest
-        )
         if hot_list:
-            # The salted winners are a union of two branches that both
-            # hash url into the shuffle partitions, so the union keeps
-            # that many partitions.  Without a node above it, Catalyst
-            # pushes the write projection (the fused text/lang UDF)
-            # through the union into each branch, where an
-            # ArrowEvalPython node hides the branch partitioning, and
-            # the union doubles to one task per branch partition, each
-            # paying Python worker set-up.  A coalesce to the same
-            # count moves no data and keeps the projection above.
-            winners = winners.coalesce(
-                int(self.spark.conf.get("spark.sql.shuffle.partitions"))
-            )
+            winners = dedup_winners_agg(valid, with_counts=harvest)
+        else:
+            valid = valid.repartition(self.pages.aligned_partitions(), F.col("url"))
+            winners = dedup_winners_window(valid, with_counts=harvest)
         obs_h = None
         if harvest:
             # next-batch skew statistics ride THIS merge job:
-            # ``_events`` (exact per-key counts, computed on the dedup
-            # window's own partitions — no exchange, no job) feeds an
-            # Observation that keeps the total and the top-64 candidate
-            # keys above a floor.  The floor tracks the salting
-            # threshold so the collect buffer stays tiny at any batch
-            # size.
+            # ``_events`` (exact per-key counts, computed on the dedup's
+            # own partitions — no exchange, no job) feeds an Observation
+            # that keeps the total and the top-64 candidate keys above a
+            # floor.  The floor tracks the hot-key threshold so the
+            # collect buffer stays tiny at any batch size.
             floor = max(_HOT_FLOOR // 4, (threshold or _HOT_FLOOR) // 4)
             obs_h = Observation()
             winners = winners.observe(
@@ -730,15 +781,12 @@ class CdcApplier:
                 F.count(F.lit(1)).alias("n_keys"),
                 _top_keys(F.col("_events") >= floor).alias("hot"),
             ).drop("_events")
-        return winners, len(hot_list), aligned, obs_h
+        return winners, len(hot_list), obs_h
 
     def _fold_harvest(self, obs_h: Observation) -> None:
         """Replace the skew profile with this batch's harvest (instant:
         the merge job already ran, the observation is resolved)."""
-        try:
-            row = obs_h.get
-        except Exception:
-            return  # empty/collapsed plan: keep previous stats
+        row = obs_h.get
         nv = int(row["n_valid"] or 0)
         if nv > 0:
             self._plan_stats = {
@@ -919,7 +967,6 @@ class CdcApplier:
         batch_id: int,
         lsn_range: tuple[int, int] | None,
         phases: dict,
-        aligned: bool = False,
     ) -> ApplyResult:
         """Merge-on-read apply: commit winners as delta files, no join.
 
@@ -933,9 +980,9 @@ class CdcApplier:
 
         - commit I/O is O(batch) — a uniform-key 10^8-event batch over
           a 100 TB table writes the batch, not the table,
-        - the merge subtree has exactly ONE exchange (the bucket-
-          aligned winner repartition); there is no per-batch target-
-          side shuffle at all,
+        - the merge subtree has exactly ONE exchange (the dedup's
+          bucket-aligned exchange, see ``_dedup``); there is no
+          per-batch target-side shuffle at all,
         - read-time cost: dirty buckets reconcile through one map-side-
           combined max_by shuffle; ``compact_deltas`` (auto above
           ``compact_threshold`` delta files) bounds it.
@@ -953,10 +1000,19 @@ class CdcApplier:
         delta = self._delta_frame(src, snap)
         props = self._batch_props(batch_id, lsn_range)
         t_w = time.monotonic()
-        new_snap = self.pages.append_deltas(
-            None, delta, props, base=snap, clustered=aligned,
-            phases=phases, guard=self._watermark_guard(batch_id),
-        )
+        # the skewed dedup's aggregate exchange takes the session's
+        # shuffle partitions: pin them to the aligned count so it is the
+        # bucket-aligned exchange (the window's explicit repartition
+        # does not read the setting).  Appliers sharing the session with
+        # a different aligned count take turns here (``_conf_pinned``).
+        aligned = {
+            "spark.sql.shuffle.partitions": str(self.pages.aligned_partitions(snap))
+        }
+        with _conf_pinned(self.spark, aligned):
+            new_snap = self.pages.append_deltas(
+                None, delta, props, base=snap, clustered=True,
+                phases=phases, guard=self._watermark_guard(batch_id),
+            )
         phases["merge_write"] = int((time.monotonic() - t_w) * 1000)
         touched = sorted(
             int(b)

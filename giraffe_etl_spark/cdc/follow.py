@@ -235,12 +235,32 @@ class ChangelogFollower:
     def _check_requested_projection(self, columns: list[str] | None) -> None:
         """Loading an existing replica: the persisted projection wins,
         but a CONFLICTING request must fail loudly, not silently serve
-        different columns than the caller asked for."""
+        different columns than the caller asked for.
+
+        Compared over the ids that still exist in the source: a kept
+        column dropped at the source leaves the replica, but its id
+        stays in the stored projection (ids are never reused), so the
+        caller's original ``columns=`` still matches.  A requested name
+        the source no longer has is ignored only when an id it had is
+        in the stored projection; any other unknown name stays an
+        error.
+        """
         if columns is None:
             return
-        want = self._resolve_projection(self.src.current_snapshot(), columns)
-        have = self._projection()
-        if have is None or want != have:
+        snap = self.src.current_snapshot()
+        live_ids = {f["id"] for f in snap.schema_fields}
+        live_names = {f["name"] for f in snap.schema_fields}
+        have = self._projection() or set()
+        dropped = {
+            f["name"]
+            for fields in snap.schemas.values()
+            for f in fields
+            if f["id"] in have - live_ids and f["name"] not in live_names
+        }
+        want = self._resolve_projection(
+            snap, [c for c in columns if c not in dropped]
+        )
+        if not have or want != have & live_ids:
             raise ValueError(
                 "replica already exists with a different projection "
                 f"(stored src ids {sorted(have) if have else 'ALL'}, "
@@ -353,8 +373,8 @@ class ChangelogFollower:
         )
         # projected replica: the evolution mirror sees ONLY the kept
         # source ids — outside-projection adds/renames/drops are
-        # invisible by construction.  A kept column's drop removes it
-        # from the persisted projection too.
+        # invisible by construction.  A kept column's drop keeps its id
+        # in the persisted projection (see _check_requested_projection).
         proj = self._projection()
         dst_fields = self.dst.current_snapshot().schema_fields
         dirty = False
@@ -389,8 +409,6 @@ class ChangelogFollower:
                 if hit is not None:
                     self.dst.drop_column(hit["name"])
                 del idmap[sid_s]
-                if proj is not None:
-                    proj.discard(int(sid_s))
                 dirty = True
         for f in src_fields:
             did = idmap.get(str(f["id"]))
@@ -438,10 +456,7 @@ class ChangelogFollower:
                 "drop them on the replica or re-bootstrap"
             )
         if dirty:
-            updates = {_IDMAP_PROP: _json.dumps(idmap)}
-            if proj is not None:
-                updates[_PROJ_PROP] = _json.dumps(sorted(proj))
-            self.dst.set_properties(updates)
+            self.dst.set_properties({_IDMAP_PROP: _json.dumps(idmap)})
 
     def sync(self) -> dict:
         """Apply all source commits since the cursor; returns a report."""

@@ -4,16 +4,27 @@ All pure DataFrame -> DataFrame builders (no actions), so Catalyst sees
 one logical plan per batch and can pipeline projection/filter stages
 into a single whole-stage-codegen'd pass over the scan.
 
-Dedup (the heart of the apply stage): ``dedup_winners_window`` is the
-row_number() formulation over the bucket-aligned exchange, plus hot-key
-salting from the applier's skew plan (two-phase: per (url, salt)
-top-1, then per url top-1).  The payload crosses exactly ONE exchange,
-which doubles as the write clustering.
+Dedup (the heart of the apply stage) has two formulations of the same
+last-writer-wins answer, and the applier picks one per batch from its
+skew plan:
+
+- no hot keys detected -> ``dedup_winners_window``: row_number() over
+  the bucket-aligned ``repartition(P, url)`` exchange;
+- hot keys detected -> ``dedup_winners_agg``: one map-side-combined
+  ``max_by`` aggregate.  Its partial aggregate collapses each hot key
+  to one row per map task before the exchange, and with the shuffle
+  partitions pinned to P its one exchange is the same bucket-aligned
+  ``hashpartitioning(url, P)``.
+
+Either way the payload crosses exactly ONE exchange, which doubles as
+the write clustering.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
+
+from ..lake.table import last_writer_wins
 
 
 def batch_exprs():
@@ -89,61 +100,34 @@ def _whole_partition(w):
     return w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
 
 
-def dedup_winners_window(
-    valid: DataFrame,
-    hot_keys: list[str] | None = None,
-    n_salts: int = 16,
-    with_counts: bool = False,
-) -> DataFrame:
-    """Per-url winning event by max (warc_ts, lsn): row_number() with
-    explicit hot-key salting.
-
-    Cold keys: single window over (url).  Hot keys: phase 1 picks a
-    winner per (url, salt) with salt = pmod(hash(lsn), n_salts) —
-    spreads one hot key over n_salts reducers; phase 2 reduces the
-    <= n_salts survivors per key.  Schema-generic: whatever columns
-    the change stream carries (e.g. post-evolution extras) ride along
-    in the winner payload.
-
-    ``hot_keys``: a small list of hot url strings, compiled into an
-    ``isin`` predicate — no extra job, no broadcast exchange (the apply
-    stage reads the list from its skew plan).
+def dedup_winners_window(valid: DataFrame, with_counts: bool = False) -> DataFrame:
+    """Per-url winning event by max (warc_ts, lsn): row_number() over
+    (url).  Schema-generic: whatever columns the change stream carries
+    (e.g. post-evolution extras) ride along in the winner payload.
 
     ``with_counts``: winners additionally carry ``_events`` — the
     key's exact event count in this batch.  It rides the SAME window
     partitioning as the dedup itself (a full-partition count frame on
-    the already-sorted rows; in the salted path phase 1 counts per
-    (url, salt) and phase 2 sums the partials), so it adds no exchange
-    and no job — this is what lets the apply stage harvest next-batch
-    skew statistics from an Observation instead of a planning pass.
+    the already-sorted rows), so it adds no exchange and no job — this
+    is what lets the apply stage harvest next-batch skew statistics
+    from an Observation instead of a planning pass.
     """
-    order = (F.col("warc_ts").desc(), F.col("lsn").desc())
-    w = Window.partitionBy("url").orderBy(*order)
+    w = Window.partitionBy("url").orderBy(F.col("warc_ts").desc(), F.col("lsn").desc())
+    out = valid.withColumn("_rn", F.row_number().over(w))
+    if with_counts:
+        out = out.withColumn("_events", F.count(F.lit(1)).over(_whole_partition(w)))
+    return out.filter(F.col("_rn") == 1).drop("_rn")
 
-    def top1(df: DataFrame) -> DataFrame:
-        out = df.withColumn("_rn", F.row_number().over(w))
-        if with_counts:
-            out = out.withColumn("_events", F.count(F.lit(1)).over(_whole_partition(w)))
-        return out.filter(F.col("_rn") == 1).drop("_rn")
 
-    if not hot_keys:
-        return top1(valid)
+def dedup_winners_agg(valid: DataFrame, with_counts: bool = False) -> DataFrame:
+    """Per-url winning event by max (warc_ts, lsn): one map-side-combined
+    ``max_by`` aggregate (``last_writer_wins``, the formulation the lake
+    table's read-time reconcile uses).  Skew-proof by construction: a
+    hot key reaches the exchange as one partial row per map task.
 
-    is_hot = F.col("url").isin(list(hot_keys))
-    cold_winners = top1(valid.filter(~is_hot))
-
-    salted = valid.filter(is_hot).withColumn(
-        "_salt", F.pmod(F.hash("lsn"), F.lit(n_salts))
+    ``with_counts``: winners also carry ``_events`` (the key's exact
+    event count), a ``count`` in the same aggregate.
+    """
+    return last_writer_wins(
+        valid, "url", ["warc_ts", "lsn"], count_as="_events" if with_counts else None
     )
-    w1 = Window.partitionBy("url", "_salt").orderBy(*order)
-    phase1 = salted.withColumn("_rn", F.row_number().over(w1))
-    if with_counts:
-        phase1 = phase1.withColumn("_cnt", F.count(F.lit(1)).over(_whole_partition(w1)))
-    phase1 = phase1.filter(F.col("_rn") == 1).drop("_rn", "_salt")
-    hot_winners = phase1.withColumn("_rn", F.row_number().over(w))
-    if with_counts:
-        hot_winners = hot_winners.withColumn(
-            "_events", F.sum("_cnt").over(_whole_partition(w))
-        ).drop("_cnt")
-    hot_winners = hot_winners.filter(F.col("_rn") == 1).drop("_rn")
-    return cold_winners.unionByName(hot_winners)

@@ -74,6 +74,35 @@ def aligned_partition_count(n_buckets: int, slots: int) -> int:
     )
 
 
+def last_writer_wins(
+    df: DataFrame, key: str, order_cols: list[str], count_as: str | None = None
+) -> DataFrame:
+    """The winning row per ``key``: ``max_by(every column, order)``.
+
+    One aggregate, map-side combined: the partial aggregate before the
+    exchange collapses each key to ONE row per map task, so a key with
+    many versions (or a hot key in a change batch) ships one
+    pre-aggregated row per task, never its whole history.  The order
+    columns must be unique per key among the rows (the CDC layer
+    guarantees this with globally-unique lsns).  ``count_as``: also
+    emit the key's row count under that name, from the same aggregate.
+    """
+    cols = df.columns
+    aggs = [
+        F.max_by(
+            F.struct(*[F.col(c) for c in cols]),
+            F.struct(*[F.col(c) for c in order_cols]),
+        ).alias("_w")
+    ]
+    if count_as:
+        aggs.append(F.count(F.lit(1)).alias(count_as))
+    won = df.groupBy(key).agg(*aggs)
+    return won.select(
+        *[F.col("_w").getField(c).alias(c) for c in cols],
+        *([count_as] if count_as else []),
+    )
+
+
 class SnapshotExpired(Exception):
     """A referenced snapshot's manifest no longer exists (expired)."""
 
@@ -478,7 +507,7 @@ class Table:
         key = col or self.bucket_key()
         return F.pmod(F.hash(F.col(key)), F.lit(self.n_buckets())).cast("int")
 
-    def aligned_partitions(self) -> int:
+    def aligned_partitions(self, snap: Snapshot | None = None) -> int:
         """Partition count for a bucket-aligned hash exchange on the key.
 
         ``repartition(P, key)`` places a row in task pmod(murmur3(key), P).
@@ -488,9 +517,13 @@ class Table:
         the smallest such divisor that still fills every slot, so the
         exchange runs one task per core instead of one per bucket
         (each Python-UDF task pays a fixed worker set-up cost).
+        ``snap``: read N from this snapshot instead of loading the
+        current one.
         """
+        snap = snap or self.current_snapshot()
         return aligned_partition_count(
-            self.n_buckets(), self.spark.sparkContext.defaultParallelism
+            int(snap.properties["bucket.count"]),
+            self.spark.sparkContext.defaultParallelism,
         )
 
     def bucket_of(self, *keys, n_buckets: int | None = None) -> list[int]:
@@ -602,26 +635,15 @@ class Table:
         return clean_df.unionByName(dirty_df)
 
     def _reconcile(self, df: DataFrame, snap: Snapshot) -> DataFrame:
-        """Collapse stacked row versions to the winner per merge key.
-
-        ``max_by(payload, merge.order)`` — map-side combined, so even a
-        bucket holding many versions of a hot key ships one
-        pre-aggregated row per map task.  (warc_ts, _lsn)-style order
-        columns must be unique per key among versions — the CDC layer
-        guarantees this via globally-unique lsns.
-        """
+        """Collapse stacked row versions to the winner per merge key:
+        ``last_writer_wins`` by the table's ``merge.order``."""
         key = snap.properties.get("merge.key")
         order = snap.properties.get("merge.order")
         if not key or not order:
             raise ValueError(
                 "delta files present but merge.key/merge.order properties unset"
             )
-        order_cols = [c.strip() for c in order.split(",")]
-        cols = df.columns
-        payload = F.struct(*[F.col(c) for c in cols])
-        rank = F.struct(*[F.col(c) for c in order_cols])
-        won = df.groupBy(key).agg(F.max_by(payload, rank).alias("_w"))
-        return won.select(*[F.col(f"_w.{c}").alias(c) for c in cols])
+        return last_writer_wins(df, key, [c.strip() for c in order.split(",")])
 
     def _scan(
         self, snap: Snapshot, entries: list[dict], with_bucket_col: bool

@@ -174,8 +174,9 @@ def events_latest_per_user(spark, sf_dir):
     """Per-key latest-event collapse — the CDC dedup winner, as SQL.
 
     One groupBy with max_by over the (ts, id) rank struct, map-side
-    combined (the CDC apply picks its winners with the row_number()
-    formulation instead, cdc.plan.dedup_winners_window).
+    combined — the formulation the CDC apply uses for batches with hot
+    keys (cdc.plan.dedup_winners_agg); unskewed batches take the
+    row_number() window, cdc.plan.dedup_winners_window.
     """
     e = _t(spark, sf_dir, "events")
     payload = F.struct("event_id", "ts", "event_type", "value")

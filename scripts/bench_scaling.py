@@ -38,17 +38,104 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import signal
 import subprocess
 import sys
+import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+# A sample that runs this long is hung, not slow: a local[1] sample with
+# the default 2 reps takes ~2-4 min.  One local[1] sample once stalled
+# for 14 min with the CPU idle, so a hang fails the run loudly, with
+# thread dumps of both processes, instead of going unnoticed.
+SAMPLE_TIMEOUT_S = 1200
+
+# prepended to every sample's code: SIGUSR1 makes the child Python dump
+# every thread's stack to its stderr
+_DUMP_ON_SIGNAL = (
+    "import faulthandler, signal\n"
+    "faulthandler.register(signal.SIGUSR1, all_threads=True)\n"
+)
+
+
+def _descendants(pid: int) -> list[int]:
+    """Every live descendant process of ``pid``, from /proc."""
+    children: dict[int, list[int]] = {}
+    for d in os.listdir("/proc"):
+        if not d.isdigit():
+            continue
+        try:
+            with open(f"/proc/{d}/stat") as f:
+                stat = f.read()
+        except OSError:
+            continue
+        # the command name may hold spaces or parentheses: the fields
+        # after the last ')' are state, ppid, ...
+        ppid = int(stat.rsplit(")", 1)[1].split()[1])
+        children.setdefault(ppid, []).append(int(d))
+    out, todo = [], [pid]
+    while todo:
+        for c in children.get(todo.pop(), []):
+            out.append(c)
+            todo.append(c)
+    return out
+
+
+def _comm(pid: int) -> str:
+    try:
+        with open(f"/proc/{pid}/comm") as f:
+            return f.read().strip()
+    except OSError:
+        return ""
+
+
+def run_sample(code: str, timeout_s: float, label: str) -> tuple[str, str]:
+    """Run ``code`` in a fresh Python process; return (stdout, stderr).
+
+    On expiry of ``timeout_s``: take a ``jstack`` of every JVM below
+    the child and a faulthandler dump of the child Python, print both
+    to stderr, kill the whole process group and raise.
+    """
+    proc = subprocess.Popen(
+        [sys.executable, "-c", _DUMP_ON_SIGNAL + code],
+        stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True, cwd=REPO,
+        start_new_session=True,
+    )
+    try:
+        out, err = proc.communicate(timeout=timeout_s)
+    except subprocess.TimeoutExpired:
+        dumps = []
+        for pid in _descendants(proc.pid):
+            if _comm(pid) != "java":
+                continue
+            try:
+                js = subprocess.run(
+                    ["jstack", str(pid)], capture_output=True, text=True,
+                    timeout=120,
+                )
+                dumps.append(f"--- jstack {pid} ---\n{js.stdout}{js.stderr}")
+            except (OSError, subprocess.TimeoutExpired) as e:
+                dumps.append(f"--- jstack {pid} failed: {e!r} ---")
+        os.kill(proc.pid, signal.SIGUSR1)
+        time.sleep(2)
+        os.killpg(proc.pid, signal.SIGKILL)
+        out, err = proc.communicate()
+        dumps.append(f"--- {label} python (faulthandler) ---\n{err[-20000:]}")
+        sys.stderr.write("\n".join(dumps) + "\n")
+        raise RuntimeError(
+            f"{label} hung: no result after {timeout_s:.0f}s; thread dumps "
+            f"of its JVM(s) and Python are on stderr\n{err[-2000:]}"
+        )
+    return out, err
 
 
 def run_level(cores: int, events: int, batch: int, html_size: int, reps: int) -> dict:
     """One sample: the replay at one parallelism level in a fresh JVM.
 
     ``reps`` in-JVM repetitions; the minimum apply time is returned
-    (warm-JIT, noise-robust).
+    (warm-JIT, noise-robust).  A sample still running after
+    ``SAMPLE_TIMEOUT_S`` fails the run (see ``run_sample``).
     """
     code = f"""
 import json, sys
@@ -69,13 +156,11 @@ print("RESULT " + json.dumps({{"cores": {cores}, "events": ev,
     "apply_sec": apply_sec, "wall_sec": wall}}))
 spark.stop()
 """
-    out = subprocess.run(
-        [sys.executable, "-c", code], capture_output=True, text=True, cwd=REPO
-    )
-    for line in out.stdout.splitlines():
+    out, err = run_sample(code, SAMPLE_TIMEOUT_S, f"level {cores}")
+    for line in out.splitlines():
         if line.startswith("RESULT "):
             return json.loads(line[len("RESULT "):])
-    raise RuntimeError(f"level {cores} failed:\n{out.stdout[-2000:]}\n{out.stderr[-4000:]}")
+    raise RuntimeError(f"level {cores} failed:\n{out[-2000:]}\n{err[-4000:]}")
 
 
 def main() -> None:

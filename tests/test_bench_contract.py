@@ -62,3 +62,20 @@ def test_engine_commit_ts_in_this_repo():
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     ts = engine_last_commit_ts(repo)
     assert ts is not None and ts > 1_500_000_000
+
+
+def test_hung_scaling_sample_fails_with_thread_dumps(capsys):
+    """A scaling sample that outlives its timeout is killed and fails
+    the run, with the child Python's stacks (faulthandler) on stderr."""
+    import pytest
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    sys.path.insert(0, os.path.join(repo, "scripts"))
+    from bench_scaling import run_sample
+
+    code = "import time\ndef stuck_in_sample():\n    time.sleep(60)\nstuck_in_sample()\n"
+    t0 = time.monotonic()
+    with pytest.raises(RuntimeError, match="hung"):
+        run_sample(code, timeout_s=3, label="level 1")
+    assert time.monotonic() - t0 < 30
+    assert "stuck_in_sample" in capsys.readouterr().err

@@ -64,13 +64,14 @@ def test_single_batch_apply_matches_oracle(spark, applier):
 
 
 # hot_key_threshold per dedup route.  The ids keep the names of the
-# dedup modes this matrix once compared; all three now run the one
-# window dedup, on the route each id selects:
-#   window     auto threshold: no key salts, the bucket-aligned exchange
-#   agg        pinned 20: only the stream's hot keys salt (the skew
-#              shape the aggregate dedup was kept for)
-#   rank_join  pinned 1: every sampled key salts, so keys whose latest
-#              event is invalid take the salted two-stage rank
+# dedup modes this matrix once compared; each selects a route of the
+# one applier:
+#   window     auto threshold: no hot key, the window over the
+#              bucket-aligned exchange
+#   agg        pinned 20: the stream's hot keys are detected, so the
+#              batch takes the map-side-combined aggregate
+#   rank_join  pinned 1: every sampled key is hot, so keys whose latest
+#              event is invalid go through the aggregate too
 DEDUP_ROUTES = {"window": None, "agg": 20, "rank_join": 1}
 
 
@@ -216,7 +217,8 @@ def test_url_canonicalization_merges_aliases(spark, applier):
 
 
 def test_zipf_batch_engages_salted_path(spark, tmp_root):
-    """A skewed batch must actually take the hot-key salted path.
+    """A skewed batch must actually detect its hot keys and take the
+    map-side-combined aggregate (the path once salted, hence the name).
 
     hot_frac=0.5 over 3 hot keys -> ~83 events/key vs auto threshold
     max(64, 4*500/8)=250... so pin a threshold the skew exceeds, and
@@ -228,7 +230,7 @@ def test_zipf_batch_engages_salted_path(spark, tmp_root):
     w = CdcApplier(spark, tmp_root + "/win", n_buckets=8, hot_key_threshold=20)
     seed_pages(w.pages, spark.createDataFrame(pages))
     res = w.apply_batch(spark_changes(spark, changes), batch_id=0)
-    assert res.hot_keys_detected >= 3, "salted path must engage on zipf skew"
+    assert res.hot_keys_detected >= 3, "aggregate path must engage on zipf skew"
     assert_matches_oracle(w, pages, changes)
     # lineage: the engagement is recorded in the metrics table
     m = w.metrics.read().toPandas()
@@ -237,7 +239,7 @@ def test_zipf_batch_engages_salted_path(spark, tmp_root):
 
 
 def test_auto_threshold_engages_on_heavy_skew(spark, tmp_root):
-    """Default (auto) threshold: a key holding ~half the batch salts."""
+    """Default (auto) threshold: a key holding ~half the batch is hot."""
     cfg = ChangeGenConfig(n_keys=200, hot_frac=0.6, n_hot_keys=1)
     changes = gen_changes(2000, cfg)
     pages = gen_pages(0)
@@ -255,8 +257,9 @@ def test_auto_threshold_engages_on_heavy_skew(spark, tmp_root):
 
 def test_empty_limit0_batch_keys_mode(spark, tmp_root):
     """A .limit(0) batch (optimizer collapses the scan to an empty
-    LocalRelation, so the planning Observation never fires) must apply
-    as a clean zero-row batch, and the stream must keep working after.
+    LocalRelation; the merge job's Observation resolves to zero) must
+    apply as a clean zero-row batch, and the stream must keep working
+    after.
     """
     pages = gen_pages(5)
     a = CdcApplier(spark, tmp_root + "/l0", n_buckets=4)
@@ -267,6 +270,21 @@ def test_empty_limit0_batch_keys_mode(spark, tmp_root):
     changes = gen_changes(100, ChangeGenConfig(n_keys=5))
     a.apply_batch(spark_changes(spark, changes), batch_id=1)
     assert_matches_oracle(a, pages, changes)
+
+
+def test_observation_failure_surfaces(spark, applier, monkeypatch):
+    """A failing Observation is an error, never a plausible count: the
+    valid-row count must not silently become the quarantine count."""
+    from pyspark.sql import Observation
+
+    def broken(self):
+        raise RuntimeError("observation lost")
+
+    seed_pages(applier.pages, spark.createDataFrame(gen_pages(10)))
+    changes = gen_changes(100, ChangeGenConfig(n_keys=10, malformed_frac=0.2))
+    monkeypatch.setattr(Observation, "get", property(broken))
+    with pytest.raises(RuntimeError, match="observation lost"):
+        applier.apply_batch(spark_changes(spark, changes), batch_id=0)
 
 
 def _oracle_winner_count(changes):
@@ -322,8 +340,8 @@ def test_sampled_planning_matches_oracle(spark, tmp_root):
     """Cold-start planning reads hot keys from a sample; touched
     buckets and counts come from the commit.  Neither may change ANY
     answer — only the number of passes over the batch.  Skew included:
-    the pinned threshold raises the sample fraction so the salted path
-    engages.
+    the pinned threshold raises the sample fraction so the aggregate
+    path engages.
     """
     cfg = ChangeGenConfig(n_keys=50, hot_frac=0.5, n_hot_keys=3)
     changes = gen_changes(800, cfg)
@@ -417,11 +435,10 @@ def test_adaptive_steady_state_runs_zero_planning_jobs(spark, tmp_root):
 
 
 def test_adaptive_salts_from_harvest_on_next_batch(spark, tmp_root):
-    """A skewed batch teaches the harvest; the NEXT batch salts without
-    any planning job.  (Reactive skew handling: batch 0 itself runs
-    unsalted when statistics are pinned-threshold cold... here cold
-    start samples, so batch 0 detects too — the assertion that matters
-    is batch 1 detecting WITH plan_collect == 0.)"""
+    """A skewed batch teaches the harvest; the NEXT batch detects its
+    hot keys without any planning job.  (Here the cold start samples,
+    so batch 0 detects too — the assertion that matters is batch 1
+    detecting WITH plan_collect == 0.)"""
     cfg = ChangeGenConfig(n_keys=50, hot_frac=0.5, n_hot_keys=3)
     changes = gen_changes(1000, cfg)
     a = CdcApplier(spark, tmp_root, n_buckets=8, hot_key_threshold=20)
@@ -429,7 +446,7 @@ def test_adaptive_salts_from_harvest_on_next_batch(spark, tmp_root):
     a.apply_batch(spark_changes(spark, changes.iloc[:500]), batch_id=0)
     res = a.apply_batch(spark_changes(spark, changes.iloc[500:]), batch_id=1)
     assert res.phase_ms["plan_collect"] == 0
-    assert res.hot_keys_detected >= 3, "harvested stats must engage salting"
+    assert res.hot_keys_detected >= 3, "harvested stats must detect hot keys"
     assert_matches_oracle(a, gen_pages(50), changes)
 
 
@@ -453,8 +470,10 @@ def test_adaptive_stats_survive_process_restart(spark, tmp_root):
 
 def test_adaptive_planning_matches_oracle(spark, tmp_root, monkeypatch):
     """Planning from harvested statistics may never change an answer:
-    a skewed replay whose later batches salt from the harvest (one
-    refresh mid-stream) matches the oracle."""
+    a skewed replay whose later batches detect hot keys from the harvest
+    (one refresh mid-stream) matches the oracle.  The refresh runs on a
+    skewed batch, so its counts come from the aggregate's ``_events``:
+    the batch after it must still detect the hot keys."""
     from giraffe_etl_spark.cdc.replay import replay
 
     monkeypatch.setattr(CdcApplier, "HARVEST_EVERY", 2)
@@ -462,9 +481,14 @@ def test_adaptive_planning_matches_oracle(spark, tmp_root, monkeypatch):
                           late_frac=0.1, dup_frac=0.05, malformed_frac=0.05)
     a = CdcApplier(spark, tmp_root, n_buckets=8, hot_key_threshold=20)
     seed_pages(a.pages, spark.createDataFrame(gen_pages(50)))
-    replay(a, spark, n_events=600, batch_size=200, cfg=cfg)
+    rep = replay(a, spark, n_events=600, batch_size=200, cfg=cfg)
     assert a._plan_stats["age"] == 0  # batch 2 refreshed the profile
-    assert_matches_oracle(a, gen_pages(50), gen_changes(600, cfg))
+    assert rep.batches[-1].hot_keys_detected >= 3
+    after = replay(a, spark, n_events=800, batch_size=200, cfg=cfg).batches
+    assert [r.batch_id for r in after] == [3]
+    assert after[0].phase_ms["plan_collect"] == 0
+    assert after[0].hot_keys_detected >= 3
+    assert_matches_oracle(a, gen_pages(50), gen_changes(800, cfg))
 
 
 def test_adaptive_harvest_refreshes_on_cadence(spark, tmp_root, monkeypatch):

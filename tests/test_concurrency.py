@@ -178,6 +178,93 @@ def test_concurrent_streams_both_land(spark, tmp_root):
     assert read_pages(a1.pages).count() == 40
 
 
+def test_shared_session_pins_restore_conf(spark, tmp_root, monkeypatch):
+    """Two skewed appliers on one session (adaptive=None), whose aligned
+    counts differ (32 buckets -> 8 on the 8-slot session, 4 buckets ->
+    4), race their merge writes.  Each write plans under its OWN
+    shuffle-partition pin, not the other's or the session's 12, so each
+    writes one delta file per touched bucket; the second pin waits for
+    the first instead of saving its value, and the session ends at 12.
+    The spy holds A inside its pinned write until B has pinned (or 3 s
+    pass) and holds B until A has returned (or 3 s pass): unguarded
+    save/restore pins interleave there and leave the session at 8."""
+    from tests.test_cdc_apply import assert_matches_oracle, spark_changes
+
+    from giraffe_etl_spark.cdc.apply import seed_pages
+    from giraffe_etl_spark.cdc.generate import (
+        ChangeGenConfig,
+        gen_changes,
+        gen_pages,
+    )
+
+    key = "spark.sql.shuffle.partitions"
+    pages = gen_pages(50)
+    changes = gen_changes(600, ChangeGenConfig(n_keys=50, hot_frac=0.5, n_hot_keys=3))
+    appliers = {
+        name: CdcApplier(
+            spark, os.path.join(tmp_root, name), n_buckets=nb,
+            adaptive=None, hot_key_threshold=20,
+        )
+        for name, nb in (("a", 32), ("b", 4))
+    }
+    for ap in appliers.values():
+        seed_pages(ap.pages, spark.createDataFrame(pages))
+
+    a_in, b_in, a_done = threading.Event(), threading.Event(), threading.Event()
+    seen, errs, results = {}, [], {}
+    append_deltas = Table.append_deltas
+
+    def spy(self, *args, **kw):
+        name = threading.current_thread().name
+        if name in appliers:
+            seen[name] = spark.conf.get(key)
+            if name == "a":
+                a_in.set()
+                b_in.wait(3)
+            else:
+                b_in.set()
+                a_done.wait(3)
+        return append_deltas(self, *args, **kw)
+
+    monkeypatch.setattr(Table, "append_deltas", spy)
+
+    def run(name):
+        try:
+            if name == "b":
+                a_in.wait(60)
+            results[name] = appliers[name].apply_batch(
+                spark_changes(spark, changes), batch_id=0
+            )
+        except Exception as e:  # pragma: no cover - surfaced below
+            errs.append(e)
+        finally:
+            if name == "a":
+                a_done.set()
+
+    old = spark.conf.get(key)
+    spark.conf.set(key, "12")
+    try:
+        threads = [threading.Thread(target=run, args=(n,), name=n) for n in appliers]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join()
+        after = spark.conf.get(key)
+    finally:
+        spark.conf.set(key, old)
+
+    assert not errs, errs
+    assert after == "12"
+    assert seen == {"a": "8", "b": "4"}
+    for name, ap in appliers.items():
+        assert results[name].hot_keys_detected >= 3
+        deltas = ap.pages.current_snapshot().deltas
+        assert deltas and all(len(fs) == 1 for fs in deltas.values()), (
+            name, deltas,
+        )
+        assert_matches_oracle(ap, pages, changes)
+
+
 def test_watermark_guard_raises_batch_raced(spark, tmp_root):
     ap = CdcApplier(spark, tmp_root, n_buckets=4, adaptive=None)
     ap.apply_batch(_changes(spark, 10), batch_id=0)

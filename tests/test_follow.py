@@ -431,6 +431,40 @@ def test_projected_follower_reopen_checks_projection(
     )
 
 
+def test_projected_follower_reopens_after_kept_column_drop(
+    spark, tmp_root, src_applier
+):
+    """Reopening a projected replica with its original columns= after a
+    kept column was dropped at the source is the same projection, not
+    a conflict: ids gone from the source are ignored, before and after
+    the sync that drops the column from the replica.  A conflicting
+    live column, a name no schema ever had, and a dropped column the
+    replica never kept still fail."""
+    _apply(spark, src_applier, 0, 60, 0)
+    path = os.path.join(tmp_root, "dst")
+    other = os.path.join(tmp_root, "dst_text")
+    f = ChangelogFollower(spark, src_applier.pages, path, columns=["lang"])
+    ChangelogFollower(spark, src_applier.pages, other, columns=["text"])
+    src_applier.pages.drop_column("lang")
+    with pytest.raises(ValueError, match="unknown source columns"):
+        ChangelogFollower(
+            spark, src_applier.pages, other, columns=["text", "lang"]
+        )
+    ChangelogFollower(spark, src_applier.pages, path, columns=["lang"])
+    f.sync()
+    f = ChangelogFollower(spark, src_applier.pages, path, columns=["lang"])
+    with pytest.raises(ValueError, match="different projection"):
+        ChangelogFollower(spark, src_applier.pages, path, columns=["text"])
+    with pytest.raises(ValueError, match="unknown source columns"):
+        ChangelogFollower(spark, src_applier.pages, path, columns=["nope"])
+    _apply(spark, src_applier, 60, 120, 1)
+    f.sync()
+    rest = ["url", "warc_ts", "_lsn", "_deleted"]
+    assert set(f.dst.read().columns) == set(rest)
+    assert _rows_cols(f.dst, rest) == _rows_cols(src_applier.pages, rest)
+    ChangelogFollower(spark, src_applier.pages, path, columns=["lang"])
+
+
 # ---- predicate-filtered (partial) replicas ----------------------------------
 
 

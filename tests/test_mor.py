@@ -7,8 +7,9 @@ These lock in the two 100 TB properties the MOR design exists for
    a uniform-key batch over a table 40x its size must not rewrite the
    table (the copy-on-write failure mode),
 2. the merge subtree contains exactly ONE shuffle exchange (the
-   bucket-aligned winner repartition) — no per-batch target-side
-   exchange, because there is no target read at commit time.
+   bucket-aligned exchange of either dedup formulation) — no per-batch
+   target-side exchange, because there is no target read at commit
+   time.
 """
 
 from __future__ import annotations
@@ -96,6 +97,81 @@ def test_mor_merge_subtree_single_exchange(spark, tmp_root):
     assert re.search(r"hashpartitioning\(url#\d+, 8\)", plan), plan
 
 
+def test_mor_skewed_merge_subtree_single_exchange(spark, tmp_root):
+    """A batch with hot keys dedups with one map-side-combined aggregate,
+    and its merge frame still plans exactly ONE shuffle exchange: the
+    aggregate's own, bucket-aligned at the pinned shuffle partitions,
+    with the partial aggregate below it (hot keys collapse per map
+    task before the exchange)."""
+    import re
+
+    from tests.test_plans import n_exchanges, plan_of
+
+    from giraffe_etl_spark.cdc.apply import _conf_pinned
+
+    ap = CdcApplier(spark, tmp_root, n_buckets=32, hot_key_threshold=5)
+    seed_pages(ap.pages, spark.createDataFrame(gen_pages(50)))
+    changes = _batch(spark, 40, n_keys=20)
+    tagged = tag_batch(changes, exprs=ap._exprs)
+    valid = tagged.filter(F.col("_reason").isNull()).drop("_reason")
+    hot = "http://host1.example.org/page/1"
+    winners, n_hot, _ = ap._dedup(valid, 40, [(10, hot)])
+    assert n_hot == 1
+    src = winners.withColumn("_bucket", ap.pages.bucket_expr("url"))
+    delta = ap._delta_frame(src, ap.pages.current_snapshot())
+    pinned = {
+        # as apply_batch + _merge_mor run it: AQE off, shuffle
+        # partitions pinned to the aligned count
+        "spark.sql.adaptive.enabled": "false",
+        "spark.sql.shuffle.partitions": str(ap.pages.aligned_partitions()),
+    }
+    with _conf_pinned(spark, pinned):
+        plan = plan_of(delta)
+    assert n_exchanges(plan) == 1, plan
+    # detail blocks "(N) Node ...": N numbers the tree bottom-up
+    blocks = {
+        int(m.group(1)): b
+        for b in re.split(r"\n(?=\(\d+\) )", plan)
+        if (m := re.match(r"\((\d+)\) (\w+)", b))
+    }
+    (exchange,) = [n for n, b in blocks.items() if b.split()[1] == "Exchange"]
+    assert re.search(r"hashpartitioning\(url#\d+, 8\)", blocks[exchange]), plan
+    partial = [n for n, b in blocks.items() if "partial_max_by" in b]
+    assert partial and max(partial) < exchange, plan
+    assert not any(b.split()[1] == "Window" for b in blocks.values()), plan
+
+
+def test_skewed_write_aligned_when_session_partitions_differ(spark, tmp_root):
+    """The aggregate dedup's exchange takes the session's shuffle
+    partitions, and ``_merge_mor`` pins them to the aligned count for
+    the write.  With the session at 12, not P = 8, a skewed batch still
+    writes one delta file per touched bucket, matches the oracle, and
+    leaves the session at 12."""
+    from tests.test_cdc_apply import assert_matches_oracle, spark_changes
+
+    from giraffe_etl_spark.cdc.generate import ChangeGenConfig, gen_changes
+
+    key = "spark.sql.shuffle.partitions"
+    cfg = ChangeGenConfig(n_keys=50, hot_frac=0.5, n_hot_keys=3)
+    changes = gen_changes(600, cfg)
+    ap = CdcApplier(spark, tmp_root, n_buckets=32, hot_key_threshold=20)
+    pages = gen_pages(50)
+    seed_pages(ap.pages, spark.createDataFrame(pages))
+    old = spark.conf.get(key)
+    spark.conf.set(key, "12")
+    try:
+        res = ap.apply_batch(spark_changes(spark, changes), batch_id=0)
+        after = spark.conf.get(key)
+    finally:
+        spark.conf.set(key, old)
+
+    assert res.hot_keys_detected >= 3
+    assert after == "12"
+    deltas = ap.pages.current_snapshot().deltas
+    assert deltas and all(len(fs) == 1 for fs in deltas.values()), deltas
+    assert_matches_oracle(ap, pages, changes)
+
+
 @pytest.mark.parametrize(
     "n_buckets,slots,want",
     [(32, 1, 1), (32, 4, 4), (32, 8, 8), (32, 64, 32), (12, 8, 12), (6, 4, 6)],
@@ -143,24 +219,25 @@ def test_aligned_write_runs_one_task_per_slot(spark, tmp_root):
     assert_matches_oracle(ap, pages, changes)
 
 
-@pytest.mark.parametrize("salted,want_tasks", [(False, 28), (True, 60)])
-def test_warm_batch_job_and_task_count(spark, tmp_root, salted, want_tasks):
+@pytest.mark.parametrize("skewed,want_tasks", [(False, 28), (True, 28)])
+def test_warm_batch_job_and_task_count(spark, tmp_root, skewed, want_tasks):
     """A warm batch (planned from the harvested profile, no planning
-    job) runs a pinned number of Spark jobs and tasks, unsalted and
-    salted, on the 8-slot session.  An extra job, or a stage that
-    splits into more tasks (each Python-UDF task pays worker set-up),
-    fails here whatever the host's timing noise."""
+    job) runs a pinned number of Spark jobs and tasks on the 8-slot
+    session, without hot keys (window dedup) and with them (aggregate
+    dedup; the salted window it replaced ran 60 tasks).  An extra job,
+    or a stage that splits into more tasks (each Python-UDF task pays
+    worker set-up), fails here whatever the host's timing noise."""
     from tests.test_cdc_apply import spark_changes
 
     from giraffe_etl_spark.cdc.generate import ChangeGenConfig, gen_changes
 
     cfg = ChangeGenConfig(
-        n_keys=50, hot_frac=0.5 if salted else 0.0, n_hot_keys=3,
+        n_keys=50, hot_frac=0.5 if skewed else 0.0, n_hot_keys=3,
         malformed_frac=0.05,
     )
     changes = gen_changes(600, cfg)
     ap = CdcApplier(
-        spark, tmp_root, n_buckets=32, hot_key_threshold=20 if salted else None
+        spark, tmp_root, n_buckets=32, hot_key_threshold=20 if skewed else None
     )
     seed_pages(ap.pages, spark.createDataFrame(gen_pages(50)))
     ap.apply_batch(spark_changes(spark, changes.iloc[:300]), batch_id=0)
@@ -176,7 +253,7 @@ def test_warm_batch_job_and_task_count(spark, tmp_root, salted, want_tasks):
     )
 
     assert res.phase_ms["plan_collect"] == 0
-    assert (res.hot_keys_detected >= 3) == salted
+    assert (res.hot_keys_detected >= 3) == skewed
     assert res.rows_quarantined > 0
     # the merge write + the concurrent quarantine append, nothing else
     assert len(jobs) == 2, jobs
