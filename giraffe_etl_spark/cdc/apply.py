@@ -29,13 +29,13 @@ from __future__ import annotations
 import os
 import threading
 import time
-from contextlib import contextmanager
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 from pyspark.sql.types import StructType
 
 from ..lake import Table
+from ..session import _conf_pinned
 from .plan import (
     batch_exprs,
     dedup_winners_agg,
@@ -74,63 +74,6 @@ def _top_keys(keep) -> F.Column:
         1,
         64,
     )
-
-
-# Active conf pins of every applier in the process: (JVM session, key)
-# -> [pinned value, value to restore, holder thread ids].
-_PINS: dict[tuple, list] = {}
-_PINS_CHANGED = threading.Condition()
-
-
-def _pin_free(key: tuple, value: str) -> bool:
-    pin = _PINS.get(key)
-    if pin is None or pin[0] == value:
-        return True
-    if threading.get_ident() in pin[2]:
-        # waiting would wait on ourselves
-        raise RuntimeError(f"{key[1]} is already pinned to {pin[0]} here")
-    return False
-
-
-@contextmanager
-def _conf_pinned(spark: SparkSession, updates: dict[str, str]):
-    """Set session conf keys for the block, then restore (or unset) them.
-
-    Safe to overlap across threads: a key already pinned to the SAME
-    value in this session is shared, and its last holder restores the
-    value from before the first pin; a DIFFERENT value waits until the
-    key is free, so no pinned block ever plans under another block's
-    value.  Nesting a different value on one thread raises.
-
-    Session-global: an unpinned query planned concurrently in the same
-    session sees the pinned values (see ``adaptive`` in
-    CdcApplier.__init__).
-    """
-    keys = {(spark._jsparkSession, k): v for k, v in updates.items()}
-    me = threading.get_ident()
-    with _PINS_CHANGED:
-        _PINS_CHANGED.wait_for(
-            lambda: all(_pin_free(key, v) for key, v in keys.items())
-        )
-        for key, v in keys.items():
-            if key not in _PINS:
-                _PINS[key] = [v, spark.conf.get(key[1], None), []]
-                spark.conf.set(key[1], v)
-            _PINS[key][2].append(me)
-    try:
-        yield
-    finally:
-        with _PINS_CHANGED:
-            for key in keys:
-                pin = _PINS[key]
-                pin[2].remove(me)
-                if not pin[2]:
-                    del _PINS[key]
-                    if pin[1] is None:
-                        spark.conf.unset(key[1])
-                    else:
-                        spark.conf.set(key[1], pin[1])
-            _PINS_CHANGED.notify_all()
 
 
 def pages_internal_schema(extra: str = "") -> StructType:
@@ -539,7 +482,8 @@ class CdcApplier:
         quarantined, by an earlier run or a concurrent applier).
         """
         mark = f"stream.{self.stream_id}.last_batch"
-        if int(self.quarantine.properties.get(mark, "-1")) >= batch_id:
+        base = self.quarantine.current_snapshot()
+        if int(base.properties.get(mark, "-1")) >= batch_id:
             return 0
         # THIS THREAD plans a fresh query: it must not share the
         # HOF-bearing normalize tree with the main thread's merge
@@ -555,7 +499,8 @@ class CdcApplier:
         )
         try:
             snap = self.quarantine.append(
-                q_df, {mark: str(batch_id)}, guard=self._watermark_guard(batch_id)
+                q_df, {mark: str(batch_id)}, base=base,
+                guard=self._watermark_guard(batch_id),
             )
         except BatchRaced:
             return 0  # a concurrent applier quarantined this batch
@@ -996,7 +941,7 @@ class CdcApplier:
         (BDBLookupTable.java:81-100, behavior studied — not ported).
         """
         snap = self.pages.current_snapshot()
-        src = winners.withColumn("_bucket", self.pages.bucket_expr("url"))
+        src = winners.withColumn("_bucket", self.pages.bucket_expr("url", snap))
         delta = self._delta_frame(src, snap)
         props = self._batch_props(batch_id, lsn_range)
         t_w = time.monotonic()
@@ -1051,7 +996,8 @@ class CdcApplier:
         import pandas as pd
 
         mark = f"stream.{self.stream_id}.last_batch"
-        if int(self.metrics.properties.get(mark, "-1")) >= res.batch_id:
+        snap = self.metrics.current_snapshot()
+        if int(snap.properties.get(mark, "-1")) >= res.batch_id:
             return
         rows = [
             (self.stream_id, res.batch_id, "input", None, res.rows_in, res.wall_ms),
@@ -1067,7 +1013,7 @@ class CdcApplier:
             columns=["stream_id", "batch_id", "stage", "bucket", "rows", "wall_ms"],
         )
         # metadata-scale rows: driver-side parquet append, no Spark job
-        self.metrics.append_local(pdf, {mark: str(res.batch_id)})
+        self.metrics.append_local(pdf, {mark: str(res.batch_id)}, base=snap)
 
     # ---- maintenance ---------------------------------------------------------
 

@@ -109,13 +109,18 @@ def parquet_log_source(path: str):
     lsn of row i lies in [3i, 3i+2], so rows [lo, hi) are exactly
     lsn in [3*lo, 3*hi): a pushed-down range predicate the parquet
     reader answers from row-group statistics — the Spark shape of
-    "seek to binlog offset".
+    "seek to binlog offset".  The log's schema is known
+    (``_CHANGES_SCHEMA``), so opening a batch runs no schema-inference
+    job.
     """
     from pyspark.sql import functions as F
 
+    from .generate import _CHANGES_SCHEMA
+
     def src(spark, cfg, lo, hi):
         return (
-            spark.read.parquet(path)
+            spark.read.schema(_CHANGES_SCHEMA)
+            .parquet(path)
             .filter((F.col("lsn") >= 3 * lo) & (F.col("lsn") < 3 * hi))
         )
 

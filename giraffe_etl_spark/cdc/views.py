@@ -12,12 +12,13 @@ recompute incrementally.
 
 Cost per sync at 100 TB: O(changed files) scan + the bucket-pruned
 pre-image read (both from ``read_changes``), one partial-aggregated
-shuffle down to |groups| rows, and an O(groups) copy-on-write rewrite
-of the rollup table — the source's base data is never re-read and no
-keyed replica is stored.  Exactly-once comes from the same trick the
-applier and follower use: the source-snapshot cursor is committed
-atomically WITH the rollup data, so a crashed sync replays
-idempotently.
+shuffle down to the touched groups' signed deltas, collected to the
+driver, and a driver-side O(groups) merge and replace of the rollup's
+one file (pyarrow read + write, no Spark job) — the source's base data
+is never re-read and no keyed replica is stored.  Exactly-once comes
+from the same trick the applier and follower use: the source-snapshot
+cursor is committed atomically WITH the rollup data, so a crashed sync
+replays idempotently.
 
 Behavior studied (not ported): the reference has no changelog and no
 derived-view maintenance; its nearest analog is re-running an
@@ -132,8 +133,8 @@ class IncrementalRollup:
         )
         from pyspark.sql.types import StructType
 
-        # the rollup is |groups| rows: one bucket keeps every sync's
-        # copy-on-write rewrite a single tiny file
+        # the rollup is |groups| rows: one bucket, one file, read and
+        # replaced on the driver by every sync
         self.dst = Table.create(
             spark,
             dst_path,
@@ -152,9 +153,9 @@ class IncrementalRollup:
         commits WITH it.  Also the recovery path: ``reseed()`` calls
         this when the cursor fell behind the source's retention window."""
         snap = self.src.current_snapshot()
-        self.dst.overwrite_buckets(
-            [0],
-            self._aggregate_live(self.src.read(snap)),
+        agg = self._aggregate_live(self.src.read(snap)).toArrow()
+        self.dst.overwrite_local(
+            {c: agg.column(c).to_pylist() for c in agg.column_names},
             properties_update={_CURSOR_PROP: str(snap.snapshot_id)},
         )
 
@@ -191,8 +192,12 @@ class IncrementalRollup:
         ``src_range`` (the source snapshot window (from, to]) and
         ``src_snapshot`` (the new cursor).
         """
+        # the deltas below are relative to THIS rollup state: its cursor
+        # opens the window, its rows take the deltas, and the commit
+        # goes through only if bucket 0 is still these rows
+        base = self.dst.current_snapshot()
+        cursor = int(base.properties[_CURSOR_PROP])
         head = self.src.current_snapshot()
-        cursor = self.cursor
         if head.snapshot_id <= cursor:
             return {
                 "commits": 0,
@@ -252,45 +257,7 @@ class IncrementalRollup:
             .groupBy(*self.group_cols)
             .agg(*self._measure_cols(F.col("_sign")))
         )
-        # null-SAFE outer merge: a null group value is a legal group
-        # (Spark's groupBy folds nulls into one group), but a plain
-        # equi-join would never match it — current and delta null-group
-        # rows would both survive as duplicates.  eqNullSafe pairs them.
-        names = list(self._all_measures())
-        cur_df = self.dst.read().select(
-            *[F.col(c).alias(f"_cur_g_{c}") for c in self.group_cols],
-            *[F.col(m).alias(f"_cur_{m}") for m in names],
-        )
-        cond = None
-        for c in self.group_cols:
-            e = cur_df[f"_cur_g_{c}"].eqNullSafe(deltas[c])
-            cond = e if cond is None else (cond & e)
-        merged = (
-            cur_df.join(deltas, cond, "full_outer")
-            .select(
-                *[
-                    F.coalesce(deltas[c], F.col(f"_cur_g_{c}")).alias(c)
-                    for c in self.group_cols
-                ],
-                *[
-                    (
-                        F.coalesce(f"_cur_{m}", F.lit(0.0))
-                        + F.coalesce(deltas[m], F.lit(0.0))
-                    ).alias(m)
-                    for m in names
-                ],
-            )
-            # group existence tracks the live-row count EXACTLY: the
-            # group vanishes when its last live row is deleted, and
-            # only then (a user measure netting to 0 is a value, not
-            # an absence)
-            .filter(F.col(_ROWS_COL) != 0.0)
-        )
-        self.dst.overwrite_buckets(
-            [0],
-            merged,
-            properties_update={_CURSOR_PROP: str(head.snapshot_id)},
-        )
+        self._commit_deltas(base, deltas.toArrow(), head.snapshot_id)
         n_rewrites = sum(1 for _, _, removed in window if removed)
         return {
             "commits": len(window) - n_rewrites,
@@ -298,6 +265,46 @@ class IncrementalRollup:
             "src_range": (cursor, head.snapshot_id),
             "src_snapshot": head.snapshot_id,
         }
+
+    def _commit_deltas(self, base, deltas, src_snapshot: int) -> None:
+        """Add the signed per-group ``deltas`` (a pyarrow Table) to the
+        rollup rows of ``base`` and replace them, with the new cursor,
+        in one commit — on the driver, both sides being O(groups) rows.
+        A concurrent sync that committed since ``base`` makes this one
+        raise ``CommitConflict`` (``overwrite_local``'s guard) instead
+        of adding the same window twice.
+
+        The merge is null-SAFE: a null group value is one group (as
+        under groupBy), and Python tuples of group values compare None
+        equal to None.  Group existence tracks the live-row count
+        EXACTLY: a group vanishes when its ``_rows`` nets to 0, and only
+        then (a user measure netting to 0 is a value, not an absence).
+        """
+        names = list(self._all_measures())
+        g = len(self.group_cols)
+
+        def rows(tbl):
+            cols = self.group_cols + names
+            return zip(*[tbl.column(c).to_pylist() for c in cols])
+
+        merged: dict[tuple, list[float]] = {}
+        for tbl in (self.dst.read_local(base), deltas):
+            for r in rows(tbl):
+                tot = merged.setdefault(r[:g], [0.0] * len(names))
+                for i, v in enumerate(r[g:]):
+                    tot[i] += v or 0.0
+        kept = [(k, v) for k, v in merged.items() if v[-1] != 0.0]
+        columns = {
+            c: [k[i] for k, _ in kept] for i, c in enumerate(self.group_cols)
+        }
+        columns.update(
+            {m: [v[i] for _, v in kept] for i, m in enumerate(names)}
+        )
+        self.dst.overwrite_local(
+            columns,
+            properties_update={_CURSOR_PROP: str(src_snapshot)},
+            base=base,
+        )
 
     def read(self) -> DataFrame:
         """The rollup: one row per group with live rows (the hidden

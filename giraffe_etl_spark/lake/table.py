@@ -53,6 +53,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StructType
 
+from ..session import _conf_pinned
 from .fileio import FileIO, PosixFileIO
 from .catalog_http import CasConflict
 
@@ -63,6 +64,21 @@ _WIDENINGS = {
     ("timestamp_ntz", "timestamp"),
     ("date", "timestamp"),
 }
+
+
+# Scans list their files serially on the driver: the manifest already
+# names every file, and parallel partition discovery would run a Spark
+# job with one task per path once a scan passes the threshold (32).
+_SERIAL_LISTING = {
+    "spark.sql.sources.parallelPartitionDiscovery.threshold": str(2**31 - 1)
+}
+
+
+def _struct(fields: list[dict]) -> StructType:
+    """The Spark struct of a manifest schema's field list."""
+    return StructType.fromDDL(
+        ", ".join(f"`{f['name']}` {f['type']}" for f in fields)
+    )
 
 
 def aligned_partition_count(n_buckets: int, slots: int) -> int:
@@ -502,10 +518,16 @@ class Table:
     def bucket_key(self) -> str:
         return self.current_snapshot().properties["bucket.key"]
 
-    def bucket_expr(self, col: str | None = None) -> F.Column:
-        """pmod(murmur3(key), N) — the table's partition transform."""
-        key = col or self.bucket_key()
-        return F.pmod(F.hash(F.col(key)), F.lit(self.n_buckets())).cast("int")
+    def bucket_expr(
+        self, col: str | None = None, snap: Snapshot | None = None
+    ) -> F.Column:
+        """pmod(murmur3(key), N) — the table's partition transform.
+        ``snap``: take N and the key from this snapshot instead of
+        loading the current one."""
+        snap = snap or self.current_snapshot()
+        key = col or snap.properties["bucket.key"]
+        n = int(snap.properties["bucket.count"])
+        return F.pmod(F.hash(F.col(key)), F.lit(n)).cast("int")
 
     def aligned_partitions(self, snap: Snapshot | None = None) -> int:
         """Partition count for a bucket-aligned hash exchange on the key.
@@ -583,8 +605,7 @@ class Table:
     # ---- read path --------------------------------------------------------
 
     def _current_struct(self, snap: Snapshot) -> StructType:
-        ddl = ", ".join(f"`{f['name']}` {f['type']}" for f in snap.schema_fields)
-        return StructType.fromDDL(ddl)
+        return _struct(snap.schema_fields)
 
     def read(
         self,
@@ -648,7 +669,16 @@ class Table:
     def _scan(
         self, snap: Snapshot, entries: list[dict], with_bucket_col: bool
     ) -> DataFrame:
-        """Union scan of file entries, mapped onto the current schema."""
+        """Union scan of file entries, mapped onto the current schema.
+
+        Opened from the manifest alone, so building the DataFrame runs
+        no Spark job: each group of files is read with the schema it
+        was written under (no schema-inference job), and the listed
+        paths are stat'ed serially on the driver (no parallel-listing
+        job of one task per path above 32 paths).  Every read reaches
+        storage here — ``read``, ``read_keys``, ``read_changes`` and its
+        pre-images, compaction, the follower's change scan.
+        """
         cur_fields = snap.schema_fields
 
         # group files by the schema they were written under
@@ -656,17 +686,22 @@ class Table:
         for fi in entries:
             groups.setdefault(str(fi["schema_id"]), []).append(fi["path"])
 
-        empty = self.spark.createDataFrame([], self._current_struct(snap))
-        if with_bucket_col:
-            empty = empty.withColumn("_bucket", F.lit(None).cast("int"))
         if not groups:
+            empty = self.spark.createDataFrame([], self._current_struct(snap))
+            if with_bucket_col:
+                empty = empty.withColumn("_bucket", F.lit(None).cast("int"))
             return empty
 
         parts = []
-        for sid, paths in groups.items():
-            file_fields = snap.schemas[sid]
-            file_by_id = {f["id"]: f for f in file_fields}
-            df = self.spark.read.parquet(*paths)
+        with _conf_pinned(self.spark, _SERIAL_LISTING):
+            opened = {
+                sid: self.spark.read.schema(_struct(snap.schemas[sid])).parquet(
+                    *paths
+                )
+                for sid, paths in groups.items()
+            }
+        for sid, df in opened.items():
+            file_by_id = {f["id"]: f for f in snap.schemas[sid]}
             cols = []
             for f in cur_fields:
                 old = file_by_id.get(f["id"])
@@ -694,9 +729,16 @@ class Table:
     # ---- write path --------------------------------------------------------
 
     def _write_files(
-        self, df: DataFrame, clustered: bool = False, phases: dict | None = None
+        self,
+        df: DataFrame,
+        base: Snapshot,
+        clustered: bool = False,
+        phases: dict | None = None,
     ) -> dict[str, list[dict]]:
         """Write df (must carry ``_bucket``) into new immutable files.
+
+        ``base`` is the snapshot df was built under: its schema id tags
+        the new files, and its bucket count and ``stats.cols`` apply.
 
         Returns bucket -> file-entry list.  The data is clustered on
         ``_bucket`` before writing so each bucket lands in ONE file per
@@ -727,7 +769,7 @@ class Table:
             # and 32 near-empty tasks would pay fixed per-task cost at
             # low parallelism for nothing
             par = self.spark.sparkContext.defaultParallelism
-            n_parts = min(self.n_buckets(), max(2 * par, 4))
+            n_parts = min(int(base.properties["bucket.count"]), max(2 * par, 4))
             out = df.repartition(n_parts, F.col("_bucket"))
         t_j = time.monotonic()
         out.write.partitionBy("_bucket").mode("overwrite").parquet(out_dir)
@@ -735,10 +777,9 @@ class Table:
             phases["write_job"] = int((time.monotonic() - t_j) * 1000)
         t_f = time.monotonic()
         result: dict[str, list[dict]] = {}
-        cur = self.current_snapshot()
-        sid = cur.schema_id
+        sid = base.schema_id
         stats_cols = [
-            c for c in cur.properties.get("stats.cols", "").split(",") if c
+            c for c in base.properties.get("stats.cols", "").split(",") if c
         ]
         paths: list[tuple[str, str]] = []  # (bucket, path)
         for entry in os.listdir(out_dir):
@@ -777,10 +818,12 @@ class Table:
             phases["footers"] = int((time.monotonic() - t_f) * 1000)
         return result
 
-    def _with_bucket(self, df: DataFrame) -> DataFrame:
+    def _with_bucket(
+        self, df: DataFrame, snap: Snapshot | None = None
+    ) -> DataFrame:
         if "_bucket" in df.columns:
             return df
-        return df.withColumn("_bucket", self.bucket_expr())
+        return df.withColumn("_bucket", self.bucket_expr(snap=snap))
 
     def _retry_commit(
         self,
@@ -833,7 +876,7 @@ class Table:
         without touching data (see ``_retry_commit``).
         """
         base = base or self.current_snapshot()
-        new_files = self._write_files(self._with_bucket(df))
+        new_files = self._write_files(self._with_bucket(df, base), base)
 
         def compose(b: Snapshot) -> Snapshot:
             buckets = {k: list(fs) for k, fs in b.buckets.items()}
@@ -857,36 +900,23 @@ class Table:
         pyarrow from the driver costs milliseconds.  All rows land in
         bucket 0 — these tables are scanned whole, never key-pruned.
         """
-        import pyarrow as pa
-        import pyarrow.parquet as pq
+        import pandas as pd
 
         base = base or self.current_snapshot()
-        fields = base.schema_fields
-        names = [f["name"] for f in fields]
-        _PA = {
-            "string": pa.string(), "bigint": pa.int64(), "int": pa.int32(),
-            "long": pa.int64(), "double": pa.float64(), "float": pa.float32(),
-            "boolean": pa.bool_(), "binary": pa.binary(),
-            "timestamp": pa.timestamp("us", tz="UTC"),
-        }
+
         def clean(vals):
-            # pandas stores None as NaN in numeric columns; arrow int
-            # conversion rejects the float nan
+            # pandas stores None as NaN in numeric columns and as NaT in
+            # datetime ones; arrow conversion takes neither for a null
             return [
-                None if v is None or (isinstance(v, float) and v != v) else v
+                None
+                if v is None or v is pd.NaT or (isinstance(v, float) and v != v)
+                else v
                 for v in vals
             ]
 
-        arrays = [
-            pa.array(clean(pdf[n].tolist()), type=_PA.get(f["type"], pa.string()))
-            for n, f in zip(names, fields)
-        ]
-        table = pa.Table.from_arrays(arrays, names=names)
-        out_dir = os.path.join(self.data_dir, uuid.uuid4().hex, "_bucket=0")
-        os.makedirs(out_dir)
-        path = os.path.join(out_dir, "part-0.parquet")
-        pq.write_table(table, path)
-        entry = {"path": path, "schema_id": base.schema_id, "rows": len(pdf)}
+        entry = self._local_file(
+            base, {n: clean(pdf[n].tolist()) for n in pdf.columns}
+        )
 
         def compose(b: Snapshot) -> Snapshot:
             buckets = {k: list(fs) for k, fs in b.buckets.items()}
@@ -894,6 +924,75 @@ class Table:
             return self._commit(b, buckets, properties_update, operation="append")
 
         return self._retry_commit(compose, base)
+
+    def overwrite_local(
+        self,
+        columns: dict[str, list],
+        properties_update: dict[str, str] | None = None,
+        base: Snapshot | None = None,
+    ) -> Snapshot:
+        """Driver-side replace of bucket 0 with ``columns`` (no Spark job).
+
+        The copy-on-write commit of a one-bucket table small enough to
+        live on the driver (the incremental rollup): one pyarrow file
+        (``columns``: name -> values) becomes bucket 0's whole content,
+        with ``overwrite_buckets``' lost-update guard — a lost commit
+        race retries only if bucket 0 did not change.
+        """
+        base = base or self.current_snapshot()
+        entry = self._local_file(base, columns)
+        return self._replace_buckets(
+            {"0"}, {"0": [entry]}, base, properties_update, "overwrite"
+        )
+
+    def read_local(self, snap: Snapshot | None = None):
+        """Driver-side read of a table the ``*_local`` writers keep: the
+        rows of bucket 0 as one pyarrow Table in the snapshot's schema
+        (no Spark job).  Refuses other buckets, deltas and files of an
+        older schema instead of reading them wrong."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        snap = snap or self.current_snapshot()
+        files = snap.buckets.get("0", [])
+        if (
+            set(snap.buckets) - {"0"}
+            or any(snap.deltas.values())
+            or any(fi["schema_id"] != snap.schema_id for fi in files)
+        ):
+            raise ValueError(
+                "read_local reads only bucket 0's base files, written "
+                "under the snapshot's schema"
+            )
+        schema = to_arrow_schema(self._current_struct(snap))
+        return pa.concat_tables(
+            [schema.empty_table()]
+            + [pq.read_table(fi["path"], schema=schema) for fi in files]
+        )
+
+    def _local_file(self, base: Snapshot, columns: dict[str, list]) -> dict:
+        """Write ``columns`` (name -> values) as one bucket-0 parquet file
+        under ``base``'s schema; returns its manifest entry.
+
+        Type-exact: the arrow schema is Spark's own conversion of the
+        table schema, which raises on a type it cannot convert rather
+        than writing the column as something a typed scan cannot read.
+        """
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        schema = to_arrow_schema(self._current_struct(base))
+        table = pa.Table.from_arrays(
+            [pa.array(columns[f.name], type=f.type) for f in schema],
+            schema=schema,
+        )
+        out_dir = os.path.join(self.data_dir, uuid.uuid4().hex, "_bucket=0")
+        os.makedirs(out_dir)
+        path = os.path.join(out_dir, "part-0.parquet")
+        pq.write_table(table, path)
+        return {"path": path, "schema_id": base.schema_id, "rows": table.num_rows}
 
     def overwrite_buckets(
         self,
@@ -912,7 +1011,32 @@ class Table:
         the MOR path): swaps the touched buckets' base file lists AND
         clears their delta lists — the caller's df must therefore be
         the fully reconciled content.  Untouched buckets carry over by
-        reference.  ``clustered`` — see ``_write_files``.
+        reference.  ``clustered`` — see ``_write_files``; concurrency —
+        see ``_replace_buckets``.
+        """
+        base = base or self.current_snapshot()
+        new_files = self._write_files(
+            self._with_bucket(df, base), base, clustered=clustered, phases=phases
+        )
+        return self._replace_buckets(
+            {str(b) for b in bucket_ids},
+            new_files,
+            base,
+            properties_update,
+            operation,
+            guard,
+        )
+
+    def _replace_buckets(
+        self,
+        touched: set[str],
+        new_files: dict[str, list[dict]],
+        base: Snapshot,
+        properties_update: dict[str, str] | None,
+        operation: str,
+        guard=None,
+    ) -> Snapshot:
+        """Commit ``new_files`` as the whole content of ``touched``.
 
         Concurrency: a lost commit race is retried only when the
         concurrent commits left every TOUCHED bucket's content (base
@@ -922,17 +1046,11 @@ class Table:
         concurrent writer's rows (lost update), so ``CommitConflict``
         propagates and the caller must recompute from the new snapshot.
         """
-        base = base or self.current_snapshot()
-        new_files = self._write_files(
-            self._with_bucket(df), clustered=clustered, phases=phases
-        )
-        touched = {str(b) for b in bucket_ids}
         if not set(new_files) <= touched:
             raise ValueError(
                 f"merge wrote rows outside declared buckets: "
                 f"{sorted(set(new_files) - touched)}"
             )
-        orig = base
 
         def compose(b: Snapshot) -> Snapshot:
             buckets = {
@@ -950,8 +1068,8 @@ class Table:
                 guard(fresh)
             for t in touched:
                 if (
-                    fresh.buckets.get(t) != orig.buckets.get(t)
-                    or fresh.deltas.get(t) != orig.deltas.get(t)
+                    fresh.buckets.get(t) != base.buckets.get(t)
+                    or fresh.deltas.get(t) != base.deltas.get(t)
                 ):
                     raise CommitConflict(
                         f"bucket {t} changed during a copy-on-write "
@@ -996,7 +1114,7 @@ class Table:
         ):
             raise ValueError("append_deltas requires merge.key/merge.order properties")
         new_files = self._write_files(
-            self._with_bucket(df), clustered=clustered, phases=phases
+            self._with_bucket(df, base), base, clustered=clustered, phases=phases
         )
         if bucket_ids is not None:
             # declared-bucket containment check; pass None to derive the
@@ -1386,7 +1504,7 @@ class Table:
                 return {}
             df = self._scan(snap, entries, with_bucket_col=False)
             return self._write_files(
-                df.withColumn("_bucket", newb), clustered=True
+                df.withColumn("_bucket", newb), snap, clustered=True
             )
 
         buckets = split(snap.buckets)

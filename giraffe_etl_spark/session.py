@@ -10,6 +10,8 @@ from __future__ import annotations
 
 import os
 import tempfile
+import threading
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -130,3 +132,60 @@ def _ship_package(spark: SparkSession) -> None:
         return
     spark.sparkContext.addPyFile(build_pyfiles_zip())
     spark._giraffe_shipped = True
+
+
+# Active conf pins in the process (appliers, lake scans): (JVM session,
+# key) -> [pinned value, value to restore, holder thread ids].
+_PINS: dict[tuple, list] = {}
+_PINS_CHANGED = threading.Condition()
+
+
+def _pin_free(key: tuple, value: str) -> bool:
+    pin = _PINS.get(key)
+    if pin is None or pin[0] == value:
+        return True
+    if threading.get_ident() in pin[2]:
+        # waiting would wait on ourselves
+        raise RuntimeError(f"{key[1]} is already pinned to {pin[0]} here")
+    return False
+
+
+@contextmanager
+def _conf_pinned(spark: SparkSession, updates: dict[str, str]):
+    """Set session conf keys for the block, then restore (or unset) them.
+
+    Safe to overlap across threads: a key already pinned to the SAME
+    value in this session is shared, and its last holder restores the
+    value from before the first pin; a DIFFERENT value waits until the
+    key is free, so no pinned block ever plans under another block's
+    value.  Nesting a different value on one thread raises.
+
+    Session-global: an unpinned query planned concurrently in the same
+    session sees the pinned values (see ``adaptive`` in
+    CdcApplier.__init__).
+    """
+    keys = {(spark._jsparkSession, k): v for k, v in updates.items()}
+    me = threading.get_ident()
+    with _PINS_CHANGED:
+        _PINS_CHANGED.wait_for(
+            lambda: all(_pin_free(key, v) for key, v in keys.items())
+        )
+        for key, v in keys.items():
+            if key not in _PINS:
+                _PINS[key] = [v, spark.conf.get(key[1], None), []]
+                spark.conf.set(key[1], v)
+            _PINS[key][2].append(me)
+    try:
+        yield
+    finally:
+        with _PINS_CHANGED:
+            for key in keys:
+                pin = _PINS[key]
+                pin[2].remove(me)
+                if not pin[2]:
+                    del _PINS[key]
+                    if pin[1] is None:
+                        spark.conf.unset(key[1])
+                    else:
+                        spark.conf.set(key[1], pin[1])
+            _PINS_CHANGED.notify_all()

@@ -508,3 +508,25 @@ def test_adaptive_harvest_refreshes_on_cadence(spark, tmp_root, monkeypatch):
     a.apply_batch(spark_changes(spark, changes.iloc[200:]), batch_id=2)
     assert a._plan_stats["age"] == 0  # cadence hit: exact harvest ran
     assert_matches_oracle(a, gen_pages(20), changes)
+
+
+def test_parquet_log_source_opens_without_jobs(spark, tmp_root):
+    """A batch of a staged change log opens with the log's known schema:
+    building the frame runs no Spark job (no schema inference), and it
+    holds exactly the batch's rows."""
+    import os
+
+    from tests.test_lake import jobs_run
+
+    from giraffe_etl_spark.cdc.replay import parquet_log_source, stage_change_log
+
+    path = os.path.join(tmp_root, "log")
+    stage_change_log(spark, path, 300, segment_rows=100)
+    src = parquet_log_source(path)
+    df, jobs = jobs_run(spark, lambda: src(spark, None, 100, 200))
+    assert jobs == []
+    want = gen_changes(300, ChangeGenConfig())
+    want = want[(want.lsn >= 300) & (want.lsn < 600)]
+    assert sorted((r.lsn, r.op, r.url) for r in df.collect()) == sorted(
+        zip(want.lsn, want.op, want.url)
+    )

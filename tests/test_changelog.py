@@ -234,3 +234,32 @@ def test_read_changes_pre_images_with_commit_col(spark, tmp_root):
         (r["_change_type"], r["_commit_snapshot"]) for r in ch.collect()
     }
     assert got == {("after", s2), ("before", None)}
+
+
+def test_read_changes_with_pre_images_builds_without_jobs(spark, tmp_root):
+    """The change scan, its pre-image read and their join are built
+    from the manifests alone: no Spark job runs until the rows are
+    asked for, and the rows are the window's versions plus the prior
+    winners of the keys it touched."""
+    from tests.test_lake import jobs_run
+
+    t = mor_table(spark, tmp_root, n_buckets=8)
+    t.append(rows_df(spark, [(f"k{i}", 1, i) for i in range(40)]))
+    s1 = t.current_snapshot().snapshot_id
+    d = rows_df(spark, [("k0", 2, 100), ("k1", 2, 101), ("new", 1, 7)])
+    t.append_deltas(_buckets_of(t, d), d)
+
+    ch, jobs = jobs_run(
+        spark, lambda: t.read_changes(s1, with_pre_images=True)
+    )
+    assert jobs == []
+    got = sorted(
+        (r["k"], r["ts"], r["v"], r["_change_type"]) for r in ch.collect()
+    )
+    assert got == [
+        ("k0", 1, 0, "before"),
+        ("k0", 2, 100, "after"),
+        ("k1", 1, 1, "before"),
+        ("k1", 2, 101, "after"),
+        ("new", 1, 7, "after"),
+    ]

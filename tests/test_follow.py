@@ -678,3 +678,20 @@ def test_projection_keeps_spaced_order_and_distinct_merge_key(
         for r in f.dst.read(reconcile=True).select("k", "ts", "v").collect()
     )
     assert got == [("k1", 2, 11), ("k2", 1, 20)]
+
+
+def test_sync_runs_a_fixed_number_of_jobs(spark, tmp_root, src_applier):
+    """One follower sync over a fixed small window runs an exact number
+    of Spark jobs — the replica's delta write and nothing else: the
+    change scan opens from the source manifests, with no listing or
+    schema-inference job."""
+    from tests.test_lake import jobs_run
+
+    f = ChangelogFollower(
+        spark, src_applier.pages, os.path.join(tmp_root, "dst"), n_buckets=4
+    )
+    _apply(spark, src_applier, 0, 100, 0)
+    rep, jobs = jobs_run(spark, f.sync)
+    assert rep["commits"] == 1
+    assert len(jobs) == 2, jobs
+    assert _rows(f.dst) == _rows(src_applier.pages)

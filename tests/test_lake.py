@@ -534,3 +534,126 @@ def test_meta_tables_inspect_history_files_schemas(spark, tmp_root):
 
     with pytest.raises(ValueError, match="unknown metadata table"):
         t.meta("nope")
+
+
+def jobs_run(spark, fn):
+    """``fn()`` and the ids of the Spark jobs it ran (status-tracker
+    job range, as cdcbench counts them)."""
+    st = spark.sparkContext.statusTracker()
+    mark = max(st.getJobIdsForGroup(None), default=-1)
+    out = fn()
+    return out, [j for j in st.getJobIdsForGroup(None) if j > mark]
+
+
+def _many_file_table(spark, root):
+    """A table whose snapshot lists more files than Spark's parallel
+    partition discovery threshold (32), written under two schema ids."""
+    t = make_table(spark, root, n_buckets=8)
+    want = set()
+    for i in range(6):
+        if i == 3:
+            t.add_column("w", "string")
+        rows = [(f"k{i}_{j}", 100 * i + j) for j in range(24)]
+        if i < 3:
+            t.append(kv_df(spark, rows))
+            want |= {(k, v, None) for k, v in rows}
+        else:
+            t.append(
+                spark.createDataFrame(
+                    [(k, v, f"w{v}") for k, v in rows], "k string, v long, w string"
+                )
+            )
+            want |= {(k, v, f"w{v}") for k, v in rows}
+    snap = t.current_snapshot()
+    assert sum(len(fs) for fs in snap.buckets.values()) > 32
+    return t, want
+
+
+def test_read_over_many_files_opens_from_the_manifest(spark, tmp_root):
+    """A scan over more than 32 files builds its DataFrame with no Spark
+    job — no schema-inference job, no one-task-per-path listing job —
+    and reads the same rows, both schema ids mapped onto the current
+    one."""
+    t, want = _many_file_table(spark, tmp_root)
+    df, jobs = jobs_run(spark, t.read)
+    assert jobs == []
+    assert {(r.k, r.v, r.w) for r in df.collect()} == want
+
+
+def test_concurrent_scans_restore_discovery_threshold(spark, tmp_root):
+    """Scans on two threads pin the parallel-discovery threshold at
+    once (shared, holder-counted pin): none runs a listing job, and
+    the session's own value is back when both are done."""
+    import threading
+
+    key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    t, want = _many_file_table(spark, tmp_root)
+    spark.conf.set(key, "17")
+    try:
+        start = threading.Barrier(2)
+        built = []
+
+        def scan():
+            start.wait()
+            for _ in range(5):
+                built.append(t.read())
+
+        def both():
+            threads = [threading.Thread(target=scan) for _ in range(2)]
+            for th in threads:
+                th.start()
+            for th in threads:
+                th.join()
+
+        _, jobs = jobs_run(spark, both)
+        assert jobs == []
+        assert len(built) == 10
+        assert spark.conf.get(key) == "17"
+        assert {(r.k, r.v, r.w) for r in built[-1].collect()} == want
+    finally:
+        spark.conf.unset(key)
+
+
+def test_append_local_is_type_exact(spark, tmp_root):
+    """The driver-side writer converts the table schema with Spark's own
+    Arrow mapping: date, decimal, int and timestamp columns round-trip
+    through a typed scan (a hand-written map used to write unknown
+    types as strings), and a type Arrow cannot hold raises."""
+    import datetime as dt
+    from decimal import Decimal
+
+    import pandas as pd
+
+    schema = StructType.fromDDL(
+        "k string, d date, x decimal(10,2), n int, ts timestamp"
+    )
+    t = Table.create(
+        spark, os.path.join(tmp_root, "t"), schema, bucket_key="k", n_buckets=1
+    )
+    when = dt.datetime(2024, 5, 6, 7, 8, 9)
+    t.append_local(
+        pd.DataFrame(
+            {
+                "k": ["a", "b"],
+                "d": [dt.date(2024, 1, 2), None],
+                "x": [Decimal("12.34"), None],
+                "n": [7, None],
+                "ts": [when, None],
+            }
+        )
+    )
+    got = sorted(t.read().collect(), key=lambda r: r.k)
+    assert [tuple(r) for r in got] == [
+        ("a", dt.date(2024, 1, 2), Decimal("12.34"), 7, when),
+        ("b", None, None, None, None),
+    ]
+
+    bad = Table.create(
+        spark,
+        os.path.join(tmp_root, "bad"),
+        StructType.fromDDL("k string, iv interval year to month"),
+        bucket_key="k",
+        n_buckets=1,
+    )
+    with pytest.raises(Exception, match="(?i)interval|unsupported"):
+        bad.append_local(pd.DataFrame({"k": ["a"], "iv": [None]}))

@@ -107,7 +107,7 @@ def test_mor_skewed_merge_subtree_single_exchange(spark, tmp_root):
 
     from tests.test_plans import n_exchanges, plan_of
 
-    from giraffe_etl_spark.cdc.apply import _conf_pinned
+    from giraffe_etl_spark.session import _conf_pinned
 
     ap = CdcApplier(spark, tmp_root, n_buckets=32, hot_key_threshold=5)
     seed_pages(ap.pages, spark.createDataFrame(gen_pages(50)))
@@ -382,3 +382,34 @@ def test_mor_schema_evolution_across_delta_boundary(spark, tmp_root):
     assert winner["fetch_ms"] == 42
     untouched = [r for u, r in rows.items() if "/page/1" not in u and r["fetch_ms"] is None]
     assert untouched, "pre-evolution rows must read fetch_ms as null"
+
+
+def test_warm_batch_metadata_reads(spark, tmp_root):
+    """A warm batch reads a pinned number of metadata files: the merge
+    takes the bucket transform and the new files' schema id from the
+    snapshot it already holds, instead of re-reading ``_current`` and
+    the snapshot manifest for each (counted through the ``io=`` seam,
+    as cdcbench's ``lake.meta_reads_per_commit`` counts them)."""
+    from tests.test_cdc_apply import spark_changes
+
+    from giraffe_etl_spark.cdc.generate import ChangeGenConfig, gen_changes
+    from giraffe_etl_spark.lake import PosixFileIO
+
+    class ReadCountingIO(PosixFileIO):
+        def __init__(self):
+            super().__init__()
+            self.reads = []  # list.append is atomic across commit threads
+
+        def read_text(self, path):
+            self.reads.append(path)
+            return super().read_text(path)
+
+    io = ReadCountingIO()
+    changes = gen_changes(600, ChangeGenConfig(n_keys=50, malformed_frac=0.05))
+    ap = CdcApplier(spark, tmp_root, n_buckets=32, io=io)
+    seed_pages(ap.pages, spark.createDataFrame(gen_pages(50)))
+    ap.apply_batch(spark_changes(spark, changes.iloc[:300]), batch_id=0)
+    io.reads.clear()
+    ap.apply_batch(spark_changes(spark, changes.iloc[300:]), batch_id=1)
+    pages = [p for p in io.reads if os.sep + "pages" + os.sep in p]
+    assert (len(io.reads), len(pages)) == (14, 7), io.reads

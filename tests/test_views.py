@@ -416,3 +416,131 @@ def test_rollup_expired_cursor_raises_resync_and_reseeds(spark, tmp_root):
     rollup.sync()
     got = sorted((r["lang"], r["n_pages"]) for r in rollup.read().collect())
     assert got == [("xx", 1.0), ("yy", 7.0)]
+
+
+def test_rollup_sync_runs_a_fixed_number_of_jobs(spark, tmp_root, src_applier):
+    """One sync over a fixed small window runs an exact number of Spark
+    jobs: the signed-delta aggregate's stages (AQE, on outside the
+    apply, runs each shuffle stage as its own job) and nothing else.
+    The scans open from the manifests (no listing or schema-inference
+    job), and the current rows are read, merged and replaced on the
+    driver (no join, no rewrite job)."""
+    from tests.test_lake import jobs_run
+
+    rollup = IncrementalRollup(
+        spark,
+        src_applier.pages,
+        os.path.join(tmp_root, "rollup"),
+        group_cols=["lang"],
+        measures=MEASURES,
+    )
+    _apply(spark, src_applier, 0, 100, 0)
+    _, jobs = jobs_run(spark, rollup.sync)
+    assert len(jobs) == 5, jobs
+    assert _rollup_rows(rollup) == _recompute(src_applier.pages)
+
+
+def test_rollup_groups_on_date_and_int_columns_match_recompute(spark, tmp_root):
+    """Group columns of non-string types (date, int, with a null) keep
+    their type through the driver-side read, merge and write: the
+    rollup equals a recompute after a seed and after a sync that
+    updates, deletes and inserts."""
+    import datetime as dt
+
+    schema = StructType.fromDDL(
+        "url string, warc_ts long, day date, n int, size long, "
+        "_lsn long, _deleted boolean"
+    )
+    t = Table.create(
+        spark,
+        os.path.join(tmp_root, "t"),
+        schema,
+        bucket_key="url",
+        n_buckets=2,
+        properties={"merge.key": "url", "merge.order": "warc_ts,_lsn"},
+    )
+    d1, d2 = dt.date(2024, 1, 1), dt.date(2024, 1, 2)
+    t.append(
+        spark.createDataFrame(
+            [
+                ("u1", 1, d1, 1, 10, 1, False),
+                ("u2", 1, d1, 1, 20, 2, False),
+                ("u3", 1, d2, 2, 30, 3, False),
+                ("u4", 1, d2, None, 40, 4, False),
+            ],
+            schema,
+        )
+    )
+    rollup = IncrementalRollup(
+        spark,
+        t,
+        os.path.join(tmp_root, "rollup"),
+        group_cols=["day", "n"],
+        measures={"bytes": "size", "pages": "1"},
+    )
+
+    def rows(df):
+        return sorted(
+            ((r["day"], r["n"], r["bytes"], r["pages"]) for r in df.collect()),
+            key=lambda r: (r[0], r[1] is not None, r[1] or 0),
+        )
+
+    def recompute():
+        return rows(
+            t.read()
+            .filter(~F.col("_deleted"))
+            .groupBy("day", "n")
+            .agg(
+                F.sum("size").cast("double").alias("bytes"),
+                F.count(F.lit(1)).cast("double").alias("pages"),
+            )
+        )
+
+    assert rows(rollup.read()) == recompute()
+    t.append_deltas(
+        None,
+        spark.createDataFrame(
+            [
+                ("u1", 2, d2, 2, 11, 5, False),      # moves to (d2, 2)
+                ("u2", 2, None, None, None, 6, True),  # empties (d1, 1)
+                ("u5", 1, d1, 3, 50, 7, False),       # new group
+                ("u6", 1, d2, None, 60, 8, False),    # null group grows
+            ],
+            schema,
+        ),
+    )
+    rollup.sync()
+    assert rows(rollup.read()) == recompute()
+    assert (d1, 1) not in {(r[0], r[1]) for r in rows(rollup.read())}
+
+
+def test_rollup_racing_syncs_never_fold_a_window_twice(
+    spark, tmp_root, src_applier, monkeypatch
+):
+    """Two syncs of one rollup over the same window: the second to
+    commit finds bucket 0 changed since the rollup state its deltas
+    were computed against, and raises CommitConflict instead of adding
+    the window a second time.  Re-run, it is a no-op, and the rollup
+    equals a recompute."""
+    from giraffe_etl_spark.lake import CommitConflict
+
+    path = os.path.join(tmp_root, "rollup")
+    first = IncrementalRollup(
+        spark, src_applier.pages, path, group_cols=["lang"], measures=MEASURES
+    )
+    second = IncrementalRollup(
+        spark, src_applier.pages, path, group_cols=["lang"], measures=MEASURES
+    )
+    _apply(spark, src_applier, 0, 100, 0)
+    commit = second._commit_deltas
+
+    def lands_after_first(*args):
+        first.sync()
+        commit(*args)
+
+    monkeypatch.setattr(second, "_commit_deltas", lands_after_first)
+    with pytest.raises(CommitConflict):
+        second.sync()
+    monkeypatch.undo()
+    assert second.sync()["commits"] == 0
+    assert _rollup_rows(second) == _recompute(src_applier.pages)
