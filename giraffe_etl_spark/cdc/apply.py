@@ -209,6 +209,21 @@ class CdcApplier:
     64 (see ``_resolve_hot_threshold``); ``0`` disables hot-key
     detection, so every batch takes the window; an int pins the
     threshold.
+
+    AQE is off for the duration of every ``apply_batch`` and restored
+    after it.  It has nothing to decide on the apply path (partition
+    counts are pinned: the aligned exchange must divide ``n_buckets``;
+    skew is handled by the dedup chosen from the detected hot keys),
+    and its stage-by-stage scheduling measured 7.4 s -> 3.8 s fixed
+    cost per warm batch at local[4] with it off.  Appliers sharing a
+    session share the pin (``_conf_pinned`` counts holders).  The pin
+    is session-global: a query planned CONCURRENTLY in the same
+    SparkSession (user jobs beside foreachBatch) plans with AQE off
+    too, so an applier that shares a session with other work gets its
+    own ``spark.newSession()`` (separate conf, shared cluster).
+
+    The skew profile lives in memory only: a new applier (a restarted
+    process) plans its first batch from one cold-start sample.
     """
 
     # Cold-start plan sample: the fraction of the batch the first
@@ -234,32 +249,10 @@ class CdcApplier:
         stream_id: str = "default",
         hot_key_threshold: int | None = None,
         compact_threshold: int = 16,
-        adaptive: bool | None = False,
         io=None,
         maintenance: MaintenancePolicy | None = None,
     ):
         self.maintenance = maintenance
-        # AQE has nothing to decide on the apply path — partition counts
-        # are pinned (the aligned exchange MUST divide n_buckets),
-        # skew is handled by the map-side-combined dedup chosen from the
-        # detected hot keys, and the broadcast-size
-        # call is made from static parquet stats.  What AQE does add is
-        # stage-by-stage scheduling + replanning latency: measured 7.4s
-        # -> 3.8s fixed cost per warm batch at local[4] with it off.
-        # ``adaptive``: False (default) = disable during apply_batch and
-        # restore after; True = force on; None = leave session setting.
-        # CAUTION (multi-tenant sessions): the toggle mutates the
-        # session-global spark.sql.adaptive.enabled for the duration of
-        # apply_batch — any query planned CONCURRENTLY in the same
-        # SparkSession (e.g. user jobs alongside foreachBatch) silently
-        # plans with AQE off.  Appliers sharing a session do not clobber
-        # each other's saved value (``_conf_pinned`` counts holders), but
-        # two that pin different values take turns, one batch at a
-        # time.  When the applier shares a session with other work,
-        # either pass adaptive=None (leave the session setting alone) or
-        # give the applier its own ``spark.newSession()`` (separate
-        # conf, shared cluster).
-        self.adaptive = adaptive
         self.spark = spark
         self.root = root
         self.stream_id = stream_id
@@ -303,9 +296,9 @@ class CdcApplier:
         self.quarantine = self._side_table("quarantine", QUARANTINE_SCHEMA, "url")
         self.metrics = self._side_table("metrics", METRICS_SCHEMA, "stream_id")
         # planning statistics (fractions-of-batch hot keys + a valid
-        # count), harvested by the merges and restored from the table's
-        # snapshot properties on restart
-        self._plan_stats: dict | None = self._load_plan_stats()
+        # count): seeded by the cold-start sample, refreshed by the
+        # merges' harvest
+        self._plan_stats: dict | None = None
 
     def _side_table(self, name: str, ddl: str, key: str) -> Table:
         path = os.path.join(self.root, name)
@@ -363,13 +356,10 @@ class CdcApplier:
             # exactly-once guard: replayed batch is a committed no-op
             return ApplyResult(batch_id=batch_id, skipped=True)
 
-        # AQE pinned for the duration of this batch (see ``adaptive``
-        # in __init__, including its multi-tenant caveat)
-        pinned: dict[str, str] = {}
-        if self.adaptive is not None:
-            pinned["spark.sql.adaptive.enabled"] = str(bool(self.adaptive)).lower()
+        # AQE off for the duration of this batch (see the class
+        # docstring, including its multi-tenant caveat)
         try:
-            with _conf_pinned(self.spark, pinned):
+            with _conf_pinned(self.spark, {"spark.sql.adaptive.enabled": "false"}):
                 return self._apply_batch_inner(changes, batch_id, lsn_range, t0)
         except BatchRaced:
             # a concurrent applier won the commit race with this very
@@ -531,12 +521,10 @@ class CdcApplier:
         stationary at batch granularity, so the last profile is the
         right prior, and a drifted profile costs at most window-dedup
         (correct, just slower) batches before the harvest catches up.
-        The profile persists in the table's snapshot properties, so a
-        resumed process plans warm.
 
-        Cold start (no profile yet — a fresh process over a fresh
-        table): one tiny aggregate over a ``PLAN_SAMPLE`` sample of the
-        batch.  Detection is reliable exactly when skew matters: the
+        Cold start (no profile yet — a new applier, over a fresh or an
+        existing table): one tiny aggregate over a ``PLAN_SAMPLE``
+        sample of the batch.  Detection is reliable exactly when skew matters: the
         auto threshold grows with the batch (4x mean-per-partition), so
         a hot key's expected sample count is >= PLAN_SAMPLE * threshold
         (thousands at 10^8-event batches); with a PINNED small
@@ -619,26 +607,6 @@ class CdcApplier:
             _top_keys(F.col("_events") >= 4).alias("top"),
         )
         return agg, frac
-
-    _PLAN_STATS_PROP_SUFFIX = "plan.stats"
-
-    def _plan_stats_prop(self) -> str:
-        return f"stream.{self.stream_id}.{self._PLAN_STATS_PROP_SUFFIX}"
-
-    def _load_plan_stats(self) -> dict | None:
-        """Restore harvested statistics from the table (resume-warm)."""
-        import json as _json
-
-        raw = self.pages.properties.get(self._plan_stats_prop())
-        if not raw:
-            return None
-        try:
-            d = _json.loads(raw)
-            return {"n_valid": int(d["n"]),
-                    "hot": [(float(f), u) for f, u in d["hot"]],
-                    "age": int(d.get("age", 0))}
-        except Exception:
-            return None
 
     def _plan_fraction(self) -> float:
         """Sample fraction: raised for pinned small thresholds so a hot
@@ -842,24 +810,6 @@ class CdcApplier:
         props = {f"stream.{self.stream_id}.last_batch": str(batch_id)}
         if lsn_range is not None:
             props[f"stream.{self.stream_id}.last_lsn"] = str(lsn_range[1])
-        if self._plan_stats is not None:
-            # persist the skew profile with the offset log so a resumed
-            # process plans warm (lags one batch: the commit carries the
-            # PREVIOUS harvest; this batch's own harvest resolves with
-            # the commit's write job) — a few hundred bytes per
-            # snapshot, top-64 keys
-            import json as _json
-
-            props[self._plan_stats_prop()] = _json.dumps(
-                {
-                    "n": self._plan_stats["n_valid"],
-                    "hot": [
-                        [round(f, 8), u] for f, u in self._plan_stats["hot"]
-                    ],
-                    "age": int(self._plan_stats.get("age", 0)),
-                },
-                separators=(",", ":"),
-            )
         return props
 
     def _delta_frame(self, src: DataFrame, snap) -> DataFrame:

@@ -190,7 +190,8 @@ class IncrementalRollup:
         Returns ``commits`` (source commits folded), ``rewrites_skipped``
         (rewrite commits passed over under ``on_rewrite="skip"``),
         ``src_range`` (the source snapshot window (from, to]) and
-        ``src_snapshot`` (the new cursor).
+        ``src_snapshot`` (the new cursor).  A ``rollback`` in the window
+        raises ``ResyncRequired`` under either ``on_rewrite``.
         """
         # the deltas below are relative to THIS rollup state: its cursor
         # opens the window, its rows take the deltas, and the commit
@@ -206,16 +207,10 @@ class IncrementalRollup:
                 "src_snapshot": cursor,
             }
         try:
-            # driver-side manifest walk for the report; read_changes
-            # below does the same classification (a commit that
-            # removed files is a rewrite)
-            window = self.src.commits_between(cursor, head.snapshot_id)
-            ch = self.src.read_changes(
-                cursor,
-                head.snapshot_id,
-                with_pre_images=True,
-                on_rewrite=self.on_rewrite,
-            )
+            # one driver-side manifest walk serves the report and the
+            # scan (a commit that removed files is a rewrite)
+            from_snap = self.src.snapshot_at(cursor)
+            window = self.src._commits(from_snap, head)
         except SnapshotExpired as e:
             raise ResyncRequired(
                 f"rollup cursor (snapshot {cursor}) fell behind the "
@@ -223,6 +218,17 @@ class IncrementalRollup:
                 "changes are gone; call reseed() to re-bootstrap from a "
                 "full scan"
             ) from None
+        for snap, _, _ in window:
+            if snap.summary.get("operation") == "rollback":
+                raise ResyncRequired(
+                    f"source snapshot {snap.snapshot_id} is a rollback — "
+                    "the changelog cannot express it; call reseed() to "
+                    "re-bootstrap from a full scan"
+                )
+        ch = self.src._read_changes(
+            from_snap, head, window, self.on_rewrite,
+            with_commit_col=False, with_pre_images=True,
+        )
         live = (
             ~F.col(self.deleted_col)
             if self.deleted_col in ch.columns

@@ -144,28 +144,6 @@ class Snapshot:
     def schema_fields(self) -> list[dict]:
         return self.schemas[str(self.schema_id)]
 
-    def to_json(self) -> str:
-        return json.dumps(
-            {
-                "snapshot_id": self.snapshot_id,
-                "parent_id": self.parent_id,
-                "schema_id": self.schema_id,
-                "schemas": self.schemas,
-                "buckets": self.buckets,
-                "properties": self.properties,
-                "summary": self.summary,
-                "deltas": self.deltas,
-            },
-            sort_keys=True,
-        )
-
-    @staticmethod
-    def from_json(s: str) -> "Snapshot":
-        d = json.loads(s)
-        d.pop("format", None)
-        d.pop("writer_nonce", None)
-        return Snapshot(**d)
-
 
 # manifest-shard cache: shards are content-addressed and therefore
 # immutable, so a path can be cached forever; bounded FIFO so a
@@ -548,30 +526,41 @@ class Table:
             self.spark.sparkContext.defaultParallelism,
         )
 
-    def bucket_of(self, *keys, n_buckets: int | None = None) -> list[int]:
-        """Bucket ids for literal key values.
+    def bucket_of(self, *keys, snap: Snapshot | None = None) -> list[int]:
+        """Bucket ids for literal key values under ``snap`` (default:
+        the current snapshot).
 
-        Evaluates the EXACT partition transform (``pmod(hash(k), N)``)
-        as a literal projection — one driver-local micro-job, no data
-        scan — so lookup code can never drift from the write-side
-        murmur3 seed/variant the way a reimplementation could.
-
-        ``n_buckets``: the bucket count to hash against — callers
-        pruning a specific snapshot MUST pass that snapshot's count
-        (``rescale_buckets`` changes it between snapshots).
+        Hashes on the driver with the JVM's own ``Murmur3HashFunction``
+        — the function ``F.hash`` evaluates on the write side, seed 42 —
+        so lookup code can never drift from the partition transform the
+        way a reimplementation could, and no Spark job runs.  The key's
+        type comes from the snapshot schema: murmur3 hashes a long and
+        an int of the same value differently.  The bucket count is the
+        snapshot's (``rescale_buckets`` changes it between snapshots).
         """
-        n = n_buckets if n_buckets is not None else self.n_buckets()
-        row = (
-            self.spark.range(1)
-            .select(
-                *[
-                    F.pmod(F.hash(F.lit(k)), F.lit(n)).cast("int").alias(f"b{i}")
-                    for i, k in enumerate(keys)
-                ]
-            )
-            .first()
-        )
-        return [row[i] for i in range(len(keys))]
+        snap = snap or self.current_snapshot()
+        n = int(snap.properties["bucket.count"])
+        key = snap.properties["bucket.key"]
+        ktype = next(f["type"] for f in snap.schema_fields if f["name"] == key)
+        jvm = self.spark._jvm
+        expressions = jvm.org.apache.spark.sql.catalyst.expressions
+        murmur3 = getattr(getattr(expressions, "Murmur3HashFunction$"), "MODULE$")
+        if ktype == "string":
+            strings = jvm.org.apache.spark.unsafe.types.UTF8String
+            string_type = jvm.org.apache.spark.sql.types.DataTypes.StringType
+
+            def h(k):
+                return murmur3.hash(strings.fromString(k), string_type, 42)
+        elif ktype == "bigint":
+            def h(k):
+                return murmur3.hashLong(int(k), 42)
+        elif ktype in ("int", "smallint", "tinyint"):
+            def h(k):
+                return murmur3.hashInt(int(k), 42)
+        else:
+            raise ValueError(f"bucket_of supports string and integer keys, not {ktype}")
+        # F.hash is the 32-bit value; pmod(h, n) is Python's h % n
+        return [((int(h(k)) + 2**31) % 2**32 - 2**31) % n for k in keys]
 
     def read_keys(self, values: list, snap: Snapshot | None = None) -> DataFrame:
         """Point lookup: rows whose bucket key is in ``values``.
@@ -588,16 +577,15 @@ class Table:
         the snapshot actually being scanned: after ``rescale_buckets``,
         pruning a pre-rescale snapshot with the CURRENT count would
         select buckets absent from the old manifest and silently miss
-        rows (and a rescale racing between the hash job and the scan
+        rows (and a rescale racing between the hashing and the scan
         would do the same).  Resolving the snapshot ONCE here closes
         both.
         """
         if not values:
             raise ValueError("read_keys requires at least one key value")
         snap = snap or self.current_snapshot()
-        n = int(snap.properties["bucket.count"])
         key = snap.properties["bucket.key"]
-        bucket_ids = sorted(set(self.bucket_of(*values, n_buckets=n)))
+        bucket_ids = sorted(set(self.bucket_of(*values, snap=snap)))
         return self.read(snap=snap, buckets=bucket_ids).filter(
             F.col(key).isin(list(values))
         )
@@ -1248,33 +1236,29 @@ class Table:
         added files restate surviving rows rather than describing
         changes.
         """
-        to_id = to_id if to_id is not None else self.current_snapshot().snapshot_id
+        to_snap = (
+            self.current_snapshot() if to_id is None else self.snapshot_at(to_id)
+        )
+        return self._commits(self.snapshot_at(from_id), to_snap)
+
+    def _commits(
+        self, from_snap: Snapshot, to_snap: Snapshot
+    ) -> list[tuple[Snapshot, list[dict], list[str]]]:
+        """``commits_between`` over snapshots the caller already holds:
+        only the commits strictly inside the window are read."""
+
+        def entries(s: Snapshot) -> list[dict]:
+            return [fi for m in (s.buckets, s.deltas) for fs in m.values() for fi in fs]
+
         out = []
-        prev = self.snapshot_at(from_id)
-        for k in range(from_id + 1, to_id + 1):
-            snap = self.snapshot_at(k)
-
-            def paths(s: Snapshot) -> set[str]:
-                return {
-                    fi["path"]
-                    for m in (s.buckets, s.deltas)
-                    for fs in m.values()
-                    for fi in fs
-                }
-
-            def entries(s: Snapshot) -> list[dict]:
-                return [
-                    fi
-                    for m in (s.buckets, s.deltas)
-                    for fs in m.values()
-                    for fi in fs
-                ]
-
-            prev_paths = paths(prev)
-            added = [fi for fi in entries(snap) if fi["path"] not in prev_paths]
-            removed = sorted(prev_paths - paths(snap))
-            out.append((snap, added, removed))
-            prev = snap
+        prev_paths = {fi["path"] for fi in entries(from_snap)}
+        for k in range(from_snap.snapshot_id + 1, to_snap.snapshot_id + 1):
+            snap = to_snap if k == to_snap.snapshot_id else self.snapshot_at(k)
+            files = entries(snap)
+            paths = {fi["path"] for fi in files}
+            added = [fi for fi in files if fi["path"] not in prev_paths]
+            out.append((snap, added, sorted(prev_paths - paths)))
+            prev_paths = paths
         return out
 
     def read_changes(
@@ -1317,24 +1301,46 @@ class Table:
         ranges that end before a rewrite or resync from a full scan —
         while ``"skip"`` drops those commits' files and keeps the
         pure-append commits' rows (Iceberg's changelog scan makes the
-        same distinction for replace snapshots).
+        same distinction for replace snapshots).  A ``rollback`` commit
+        changes content, so it raises under either setting.
 
         ``with_commit_col`` appends ``_commit_snapshot`` (the snapshot
         id that introduced each row) for consumers that need commit
         ordering.
         """
-        if on_rewrite not in ("error", "skip"):
-            raise ValueError(f"on_rewrite must be 'error' or 'skip': {on_rewrite!r}")
         to_snap = (
             self.current_snapshot()
             if to_snapshot_id is None
             else self.snapshot_at(to_snapshot_id)
         )
+        from_snap = self.snapshot_at(from_snapshot_id)
+        return self._read_changes(
+            from_snap, to_snap, self._commits(from_snap, to_snap), on_rewrite,
+            with_commit_col, with_pre_images,
+        )
+
+    def _read_changes(
+        self,
+        from_snap: Snapshot,
+        to_snap: Snapshot,
+        window: list[tuple[Snapshot, list[dict], list[str]]],
+        on_rewrite: str,
+        with_commit_col: bool,
+        with_pre_images: bool,
+    ) -> DataFrame:
+        """``read_changes`` over an already walked ``window``
+        (``_commits(from_snap, to_snap)``)."""
+        if on_rewrite not in ("error", "skip"):
+            raise ValueError(f"on_rewrite must be 'error' or 'skip': {on_rewrite!r}")
         parts = []
         touched_buckets: set[str] = set()
-        for snap, added, removed in self.commits_between(
-            from_snapshot_id, to_snap.snapshot_id
-        ):
+        for snap, added, removed in window:
+            if snap.summary.get("operation") == "rollback":
+                raise ValueError(
+                    f"snapshot {snap.snapshot_id} is a rollback — it changes "
+                    f"content, which a changelog cannot express; read up to "
+                    f"snapshot {snap.snapshot_id - 1} or resync from a full scan"
+                )
             if removed:
                 if on_rewrite == "error":
                     raise ValueError(
@@ -1381,7 +1387,6 @@ class Table:
         ]
         if not key_cols:
             raise ValueError("with_pre_images requires the merge.key property")
-        from_snap = self.snapshot_at(from_snapshot_id)
         # touched buckets are numbered under the commits' (post-window)
         # layout; the prior-state scan runs against the FROM snapshot's
         # layout.  After a mid-window rescale (k*N split, skipped as a
@@ -1495,41 +1500,32 @@ class Table:
                 f"bucket rescale must grow by an integer factor: "
                 f"{old_n} -> {new_n}"
             )
-        key = snap.properties["bucket.key"]
-        newb = F.pmod(F.hash(F.col(key)), F.lit(new_n)).cast("int")
 
         def split(manifest: dict[str, list[dict]]) -> dict[str, list[dict]]:
-            entries = [fi for fs in manifest.values() for fi in fs]
-            if not entries:
-                return {}
-            df = self._scan(snap, entries, with_bucket_col=False)
-            return self._write_files(
-                df.withColumn("_bucket", newb), snap, clustered=True
-            )
+            df = self._rescale_split(snap, manifest, new_n)
+            return {} if df is None else self._write_files(df, snap, clustered=True)
 
-        buckets = split(snap.buckets)
-        deltas = split(snap.deltas)
         return self._commit(
             snap,
-            buckets,
+            split(snap.buckets),
             {"bucket.count": str(new_n)},
-            deltas=deltas,
+            deltas=split(snap.deltas),
             operation="rescale",
         )
 
-    def rescale_split_frame(self, snap: Snapshot | None = None, new_n: int = 0):
-        """The split DataFrame ``rescale_buckets`` writes (plan tests)."""
-        snap = snap or self.current_snapshot()
-        entries = [
-            fi
-            for m in (snap.buckets, snap.deltas)
-            for fs in m.values()
-            for fi in fs
-        ]
+    def _rescale_split(
+        self, snap: Snapshot, manifest: dict[str, list[dict]], new_n: int
+    ) -> DataFrame | None:
+        """The frame ``rescale_buckets`` writes for one manifest (base
+        or deltas): its files scanned and relabelled with their bucket
+        under ``new_n`` — scan -> project, no exchange (plan-locked by
+        test).  None when the manifest has no files."""
+        entries = [fi for fs in manifest.values() for fi in fs]
+        if not entries:
+            return None
         key = snap.properties["bucket.key"]
-        newb = F.pmod(F.hash(F.col(key)), F.lit(new_n)).cast("int")
         return self._scan(snap, entries, with_bucket_col=False).withColumn(
-            "_bucket", newb
+            "_bucket", F.pmod(F.hash(F.col(key)), F.lit(new_n)).cast("int")
         )
 
     def _commit(

@@ -161,8 +161,7 @@ def _conf_pinned(spark: SparkSession, updates: dict[str, str]):
     value.  Nesting a different value on one thread raises.
 
     Session-global: an unpinned query planned concurrently in the same
-    session sees the pinned values (see ``adaptive`` in
-    CdcApplier.__init__).
+    session sees the pinned values (see the CdcApplier docstring).
     """
     keys = {(spark._jsparkSession, k): v for k, v in updates.items()}
     me = threading.get_ident()

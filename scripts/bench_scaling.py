@@ -134,26 +134,43 @@ def run_level(cores: int, events: int, batch: int, html_size: int, reps: int) ->
     """One sample: the replay at one parallelism level in a fresh JVM.
 
     ``reps`` in-JVM repetitions; the minimum apply time is returned
-    (warm-JIT, noise-robust).  A sample still running after
-    ``SAMPLE_TIMEOUT_S`` fails the run (see ``run_sample``).
+    (warm-JIT, noise-robust), with the host's busy cores over that
+    rep's timed replay (``/proc/stat``, as cdcbench counts
+    ``host.cpu_busy_share``; the timed replay is each rep's last
+    ``replay`` call, after the untimed warm-up batch).  A sample still
+    running after ``SAMPLE_TIMEOUT_S`` fails the run (see
+    ``run_sample``).
     """
     code = f"""
-import json, sys
+import json, os, sys
 sys.path.insert(0, {REPO!r})
+import giraffe_etl_spark.cdc as cdc
+from cdcbench.counters import read_cpu
 from giraffe_etl_spark.session import get_spark
 from bench import run_cdc_bench
+spans = []
+_replay = cdc.replay
+def timed_replay(*a, **kw):
+    before = read_cpu()
+    try:
+        return _replay(*a, **kw)
+    finally:
+        spans.append((before, read_cpu()))
+cdc.replay = timed_replay
 spark = get_spark("scaling-{cores}", cores={cores})
 spark.sparkContext.setLogLevel("ERROR")
 best = None
 for rep in range({reps}):
     ev, apply_sec, wall = run_cdc_bench(
         spark, n_events={events}, batch_size={batch}, html_size={html_size})
-    print("REP", rep, round(apply_sec, 2), flush=True)
+    (busy0, _, total0), (busy1, _, total1) = spans[-1]
+    busy = (busy1 - busy0) / max(total1 - total0, 1) * os.cpu_count()
+    print("REP", rep, round(apply_sec, 2), round(busy, 2), flush=True)
     if best is None or apply_sec < best[1]:
-        best = (ev, apply_sec, wall)
-ev, apply_sec, wall = best
+        best = (ev, apply_sec, wall, busy)
+ev, apply_sec, wall, busy = best
 print("RESULT " + json.dumps({{"cores": {cores}, "events": ev,
-    "apply_sec": apply_sec, "wall_sec": wall}}))
+    "apply_sec": apply_sec, "wall_sec": wall, "busy_cores": busy}}))
 spark.stop()
 """
     out, err = run_sample(code, SAMPLE_TIMEOUT_S, f"level {cores}")
@@ -198,6 +215,7 @@ def main() -> None:
     batch = args.batch or args.events
     lo_cores, hi_cores = args.n, 4 * args.n
     lo_samples, hi_samples, controls = [], [], []
+    lo_busy, hi_busy = [], []
     sys.path.insert(0, os.path.join(REPO, "scripts"))
     from cpu_control import measure as control_measure
 
@@ -214,14 +232,24 @@ def main() -> None:
         hi = run_level(hi_cores, args.events, batch, args.html_size, args.reps)
         lo_samples.append(lo["apply_sec"])
         hi_samples.append(hi["apply_sec"])
+        lo_busy.append(lo["busy_cores"])
+        hi_busy.append(hi["busy_cores"])
         print(
-            f"round {rnd}: local[{lo_cores}] {lo['apply_sec']:.2f}s  "
-            f"local[{hi_cores}] {hi['apply_sec']:.2f}s  "
+            f"round {rnd}: local[{lo_cores}] {lo['apply_sec']:.2f}s "
+            f"at {lo['busy_cores']:.2f} busy cores  "
+            f"local[{hi_cores}] {hi['apply_sec']:.2f}s "
+            f"at {hi['busy_cores']:.2f} busy cores  "
             f"(host control eff {ctl})",
             file=sys.stderr, flush=True,
         )
 
     best_lo, best_hi = min(lo_samples), min(hi_samples)
+    # busy cores of the samples the efficiency is computed from: if
+    # local[4N] keeps B4 cores busy where local[N] kept B1 (task slots
+    # plus the JVM and Python work beside them), the same CPU work per
+    # event caps the efficiency near B4 / (4 * B1)
+    busy_lo = lo_busy[lo_samples.index(best_lo)]
+    busy_hi = hi_busy[hi_samples.index(best_hi)]
     tput_lo = args.events / best_lo
     tput_hi = args.events / best_hi
     eff = (tput_hi / tput_lo) / 4.0
@@ -236,6 +264,11 @@ def main() -> None:
         "samples_n": [round(s, 2) for s in lo_samples],
         "samples_4n": [round(s, 2) for s in hi_samples],
         "efficiency": round(eff, 3),
+        "busy_cores_n": round(busy_lo, 2),
+        "busy_cores_4n": round(busy_hi, 2),
+        "busy_cores_samples_n": [round(b, 2) for b in lo_busy],
+        "busy_cores_samples_4n": [round(b, 2) for b in hi_busy],
+        "busy_cores_efficiency_cap": round(busy_hi / (4.0 * busy_lo), 3),
         "host_control_efficiency": controls,
         "pass": eff >= 0.8,
     }

@@ -127,9 +127,8 @@ def test_concurrent_appliers_same_batch_exactly_once(spark, tmp_root):
     invariant is the same: one applied, one skipped, table state equals
     a single application.
     """
-    # adaptive=None: two appliers share the session (see CdcApplier doc)
-    a1 = CdcApplier(spark, tmp_root, n_buckets=4, adaptive=None)
-    a2 = CdcApplier(spark, tmp_root, n_buckets=4, adaptive=None)
+    a1 = CdcApplier(spark, tmp_root, n_buckets=4)
+    a2 = CdcApplier(spark, tmp_root, n_buckets=4)
     changes = _changes(spark, 60)
     results = {}
 
@@ -158,8 +157,8 @@ def test_concurrent_streams_both_land(spark, tmp_root):
     ``test_concurrent_appliers_same_batch_exactly_once``; a single
     stream's batch ids are sequential by contract.
     """
-    a1 = CdcApplier(spark, tmp_root, n_buckets=4, adaptive=None, stream_id="s1")
-    a2 = CdcApplier(spark, tmp_root, n_buckets=4, adaptive=None, stream_id="s2")
+    a1 = CdcApplier(spark, tmp_root, n_buckets=4, stream_id="s1")
+    a2 = CdcApplier(spark, tmp_root, n_buckets=4, stream_id="s2")
     b0, b1 = _changes(spark, 40), _changes(spark, 40, base_lsn=1000)
     results = {}
 
@@ -179,12 +178,14 @@ def test_concurrent_streams_both_land(spark, tmp_root):
 
 
 def test_shared_session_pins_restore_conf(spark, tmp_root, monkeypatch):
-    """Two skewed appliers on one session (adaptive=None), whose aligned
-    counts differ (32 buckets -> 8 on the 8-slot session, 4 buckets ->
-    4), race their merge writes.  Each write plans under its OWN
-    shuffle-partition pin, not the other's or the session's 12, so each
-    writes one delta file per touched bucket; the second pin waits for
-    the first instead of saving its value, and the session ends at 12.
+    """Two skewed appliers on one session, whose aligned counts differ
+    (32 buckets -> 8 on the 8-slot session, 4 buckets -> 4), race their
+    merge writes.  Each write plans under its OWN shuffle-partition pin,
+    not the other's or the session's 12, so each writes one delta file
+    per touched bucket; the second pin waits for the first instead of
+    saving its value, and the session ends at 12.  Both share the AQE
+    pin: each write runs with AQE off, and the session's AQE setting
+    comes back after the last of them.
     The spy holds A inside its pinned write until B has pinned (or 3 s
     pass) and holds B until A has returned (or 3 s pass): unguarded
     save/restore pins interleave there and leave the session at 8."""
@@ -197,13 +198,13 @@ def test_shared_session_pins_restore_conf(spark, tmp_root, monkeypatch):
         gen_pages,
     )
 
-    key = "spark.sql.shuffle.partitions"
+    key, aqe = "spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled"
     pages = gen_pages(50)
     changes = gen_changes(600, ChangeGenConfig(n_keys=50, hot_frac=0.5, n_hot_keys=3))
     appliers = {
         name: CdcApplier(
             spark, os.path.join(tmp_root, name), n_buckets=nb,
-            adaptive=None, hot_key_threshold=20,
+            hot_key_threshold=20,
         )
         for name, nb in (("a", 32), ("b", 4))
     }
@@ -217,7 +218,7 @@ def test_shared_session_pins_restore_conf(spark, tmp_root, monkeypatch):
     def spy(self, *args, **kw):
         name = threading.current_thread().name
         if name in appliers:
-            seen[name] = spark.conf.get(key)
+            seen[name] = (spark.conf.get(key), spark.conf.get(aqe))
             if name == "a":
                 a_in.set()
                 b_in.wait(3)
@@ -241,21 +242,23 @@ def test_shared_session_pins_restore_conf(spark, tmp_root, monkeypatch):
             if name == "a":
                 a_done.set()
 
-    old = spark.conf.get(key)
+    old, old_aqe = spark.conf.get(key), spark.conf.get(aqe)
     spark.conf.set(key, "12")
+    spark.conf.set(aqe, "true")
     try:
         threads = [threading.Thread(target=run, args=(n,), name=n) for n in appliers]
         for t in threads:
             t.start()
         for t in threads:
             t.join()
-        after = spark.conf.get(key)
+        after = (spark.conf.get(key), spark.conf.get(aqe))
     finally:
         spark.conf.set(key, old)
+        spark.conf.set(aqe, old_aqe)
 
     assert not errs, errs
-    assert after == "12"
-    assert seen == {"a": "8", "b": "4"}
+    assert after == ("12", "true")
+    assert seen == {"a": ("8", "false"), "b": ("4", "false")}
     for name, ap in appliers.items():
         assert results[name].hot_keys_detected >= 3
         deltas = ap.pages.current_snapshot().deltas
@@ -266,7 +269,7 @@ def test_shared_session_pins_restore_conf(spark, tmp_root, monkeypatch):
 
 
 def test_watermark_guard_raises_batch_raced(spark, tmp_root):
-    ap = CdcApplier(spark, tmp_root, n_buckets=4, adaptive=None)
+    ap = CdcApplier(spark, tmp_root, n_buckets=4)
     ap.apply_batch(_changes(spark, 10), batch_id=0)
     guard = ap._watermark_guard(0)
     with pytest.raises(BatchRaced):

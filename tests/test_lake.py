@@ -343,6 +343,31 @@ def test_read_keys_point_lookup_prunes_to_key_buckets(spark, tmp_root):
     assert scanned == want_files, (scanned, want_files)
 
 
+@pytest.mark.parametrize(
+    "ktype,keys",
+    [
+        ("string", [f"k{i}" for i in range(40)] + ["", "http://a/\u00e9"]),
+        ("long", list(range(-20, 20)) + [2**31, -(2**31) - 1, 2**40, -(2**63)]),
+    ],
+)
+def test_bucket_of_matches_written_bucket_without_a_job(spark, tmp_root, ktype, keys):
+    """bucket_of hashes on the driver with the key's schema type: every
+    key's bucket equals the ``_bucket`` the write put it in (murmur3 of
+    a long differs from that of an int of the same value), and building
+    a point lookup runs no Spark job."""
+    ddl = f"k {ktype}, v long"
+    t = Table.create(
+        spark, os.path.join(tmp_root, "t"), StructType.fromDDL(ddl),
+        bucket_key="k", n_buckets=8,
+    )
+    t.append(spark.createDataFrame([(k, i) for i, k in enumerate(keys)], ddl))
+    written = {r.k: r._bucket for r in t.read(with_bucket_col=True).collect()}
+    assert t.bucket_of(*keys) == [written[k] for k in keys]
+    df, jobs = jobs_run(spark, lambda: t.read_keys(keys[:3]))
+    assert jobs == []
+    assert sorted(r.k for r in df.collect()) == sorted(keys[:3])
+
+
 def test_read_keys_honors_the_scanned_snapshots_bucket_count(spark, tmp_root):
     """Point lookups against a PRE-rescale snapshot must hash with that
     snapshot's bucket count, not the current one — otherwise the prune

@@ -78,11 +78,15 @@ def test_rescale_rows_land_in_split_image_buckets(spark, applier):
 
 
 def test_rescale_plan_has_zero_exchanges(spark, applier):
-    """The split frame is scan -> project: no shuffle at any size."""
+    """The split frames rescale_buckets writes (base and deltas) are
+    scan -> project: no shuffle at any size."""
     _seed_and_apply(spark, applier)
     t = applier.pages
-    plan = plan_of(t.rescale_split_frame(new_n=32))
-    assert n_exchanges(plan) == 0, plan
+    snap = t.current_snapshot()
+    assert snap.buckets and snap.deltas
+    for manifest in (snap.buckets, snap.deltas):
+        plan = plan_of(t._rescale_split(snap, manifest, 32))
+        assert n_exchanges(plan) == 0, plan
 
 
 def test_rescale_validation(spark, applier):

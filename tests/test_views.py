@@ -440,6 +440,69 @@ def test_rollup_sync_runs_a_fixed_number_of_jobs(spark, tmp_root, src_applier):
     assert _rollup_rows(rollup) == _recompute(src_applier.pages)
 
 
+def test_rollup_sync_reads_its_window_once(spark, tmp_root):
+    """A sync over one source commit reads three source metadata files
+    (the ``_current`` pointer, the head manifest, the cursor's manifest):
+    one manifest walk serves the sync's report and its change scan,
+    instead of walking the window again and re-reading its ends."""
+    from giraffe_etl_spark.lake import PosixFileIO
+
+    class ReadCountingIO(PosixFileIO):
+        def __init__(self):
+            super().__init__()
+            self.reads = []
+
+        def read_text(self, path):
+            self.reads.append(path)
+            return super().read_text(path)
+
+    io = ReadCountingIO()
+    applier = CdcApplier(spark, os.path.join(tmp_root, "src"), n_buckets=8, io=io)
+    seed_pages(applier.pages, spark.createDataFrame(gen_pages(50)))
+    rollup = IncrementalRollup(
+        spark,
+        applier.pages,
+        os.path.join(tmp_root, "rollup"),
+        group_cols=["lang"],
+        measures=MEASURES,
+    )
+    _apply(spark, applier, 0, 100, 0)
+    io.reads.clear()
+    rep = rollup.sync()
+    src = [p for p in io.reads if p.startswith(applier.pages.path)]
+    assert rep["commits"] == 1
+    assert len(src) == 3 and len(set(src)) == 3, src
+    assert _rollup_rows(rollup) == _recompute(applier.pages)
+
+
+def test_rollup_refuses_a_source_rollback(spark, tmp_root, src_applier):
+    """A rollback changes content, so it is never skipped as a
+    restatement: under on_rewrite='skip' the rollup raises
+    ResyncRequired (as the follower does) instead of folding a window
+    that leaves it unequal to the recompute, and read_changes raises."""
+    from giraffe_etl_spark.cdc import ResyncRequired
+
+    _apply(spark, src_applier, 0, 100, 0)
+    rollup = IncrementalRollup(
+        spark,
+        src_applier.pages,
+        os.path.join(tmp_root, "rollup"),
+        group_cols=["lang"],
+        measures=MEASURES,
+        on_rewrite="skip",
+    )
+    pre = src_applier.pages.current_snapshot().snapshot_id
+    _apply(spark, src_applier, 100, 200, 1)
+    rollup.sync()
+    src_applier.pages.rollback(pre)
+    with pytest.raises(ResyncRequired, match="rollback"):
+        rollup.sync()
+    with pytest.raises(ValueError, match="rollback"):
+        src_applier.pages.read_changes(pre + 1, on_rewrite="skip")
+    rollup.reseed()
+    assert _rollup_rows(rollup) == _recompute(src_applier.pages)
+
+
 def test_rollup_groups_on_date_and_int_columns_match_recompute(spark, tmp_root):
     """Group columns of non-string types (date, int, with a null) keep
     their type through the driver-side read, merge and write: the
