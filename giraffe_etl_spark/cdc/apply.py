@@ -754,7 +754,7 @@ class CdcApplier:
         """Fused text/lang transform chain over winner rows.
 
         Applied AFTER the last exchange: an ArrowEvalPython node does
-        not propagate its child's output partitioning, so a pandas UDF
+        not propagate its child's output partitioning, so an Arrow UDF
         ahead of the exchange-consuming operators would force a
         redundant payload re-shuffle (see
         test_pandas_udf_breaks_partition_propagation).  Winner rows get
@@ -778,9 +778,8 @@ class CdcApplier:
                 # crosses to Python once, (text, lang) come back once.
                 # Both GetStructField references resolve to the same
                 # PythonUDF expression, which ExtractPythonUDFs pulls
-                # into a single ArrowEvalPython node (verified by plan
-                # test: exactly one ArrowEvalPython in the merge
-                # subtree).
+                # into a single ArrowEvalPython node (pinned by
+                # test_mor_merge_subtree_single_exchange).
                 from ..functions.udf import extract_text_lang_udf
 
                 tl = extract_text_lang_udf(F.when(live, F.col(html_c)))

@@ -467,7 +467,7 @@ class ChangelogFollower:
         entries: list[dict] = []
         n_commits = 0
         try:
-            commits = self.src.commits_between(cur, head.snapshot_id)
+            commits = self.src._commits(self.src.snapshot_at(cur), head)
         except SnapshotExpired as e:
             raise ResyncRequired(
                 f"follower cursor (snapshot {cur}) fell behind the source's "

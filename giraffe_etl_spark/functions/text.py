@@ -3,15 +3,21 @@
 Reference analog: the per-record transform chain of giraffe-etl
 (SURVEY.md §2.2; codegen'd ``work()`` chains,
 libgiraffe2 factories/InnerNodeSource.java:207-222).  Here each
-transform is a **pure function** used in two places:
+transform is a **pure function**, and this module is the single source
+of truth for html -> text and text -> lang:
 
-1. wrapped in an Arrow-batched ``pandas_udf`` (functions/udf.py) for the
-   distributed path, and
-2. called directly by the pandas oracle (cdc/oracle.py).
+1. the pandas oracle (cdc/oracle.py) calls it directly;
+2. ``extract_text`` and ``tag_lang`` are the oracle of their
+   Arrow-array kernel (functions/text_arrow.py), which the distributed
+   path runs through ``arrow_udf`` (functions/udf.py): the kernel hands
+   back to this module's own steps every row it cannot prove
+   byte-identical, and tests/test_text_arrow.py checks it against these
+   functions;
+3. ``token_count``, ``quality_score`` and ``fingerprint64`` are wrapped
+   row by row in ``pandas_udf``s (functions/udf.py).
 
-Sharing the byte-level implementation is what guarantees the
-"byte-identical extracted text per url" invariant (BASELINE.json
-input_hint): there is a single source of truth for html -> text.
+That is what guarantees the "byte-identical extracted text per url"
+invariant (BASELINE.json input_hint).
 
 All functions are deterministic: no wall-clock, no locale, no ambient
 randomness.

@@ -1,10 +1,14 @@
-"""Arrow-batched pandas UDF wrappers over the pure transform library.
+"""Arrow-batched UDF wrappers over the pure transform library.
 
 The giraffe task chain (SURVEY.md §2.2) becomes a chain of
-``withColumn`` calls over these UDFs.  All of them are Series->Series
-``pandas_udf``s: data crosses the JVM/Python boundary in Arrow record
-batches (no per-row Python UDFs anywhere in the engine, per
-BASELINE.json input_hint).
+``withColumn`` calls over these UDFs.  Data crosses the JVM/Python
+boundary in Arrow record batches (no per-row Python UDFs anywhere in
+the engine, per BASELINE.json input_hint).  The html -> (text, lang)
+UDFs are ``arrow_udf``s over one kernel, functions/text_arrow.py, that
+works on whole Arrow arrays (no per-row Python object) and hands back
+to the pure functions of functions/text.py only the rows it cannot
+prove byte-identical; the other UDFs are Series->Series
+``pandas_udf``s that map the pure functions row by row.
 
 Scale note: each UDF is stateless and embarrassingly parallel — cost is
 O(rows) per partition with zero shuffle.  On a 1000-executor cluster
@@ -14,6 +18,7 @@ these run inside the same stage as the surrounding projections.
 from __future__ import annotations
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DoubleType,
@@ -24,17 +29,18 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from .text import extract_text, fingerprint64, quality_score, tag_lang, token_count
+from . import text_arrow
+from .text import fingerprint64, quality_score, token_count
 
 
-@F.pandas_udf(StringType())
-def extract_text_udf(html: pd.Series) -> pd.Series:
-    return html.map(lambda b: extract_text(bytes(b)) if b is not None else None)
+@F.arrow_udf(StringType())
+def extract_text_udf(html: pa.Array) -> pa.Array:
+    return text_arrow.extract_text(html)
 
 
-@F.pandas_udf(StringType())
-def tag_lang_udf(text: pd.Series) -> pd.Series:
-    return text.map(tag_lang)
+@F.arrow_udf(StringType())
+def tag_lang_udf(text: pa.Array) -> pa.Array:
+    return text_arrow.tag_lang(text)
 
 
 @F.pandas_udf(IntegerType())
@@ -52,7 +58,7 @@ def fingerprint64_udf(text: pd.Series) -> pd.Series:
     return text.map(fingerprint64).astype("Int64")
 
 
-@F.pandas_udf(
+@F.arrow_udf(
     StructType(
         [
             StructField("text", StringType()),
@@ -60,7 +66,7 @@ def fingerprint64_udf(text: pd.Series) -> pd.Series:
         ]
     )
 )
-def extract_text_lang_udf(html: pd.Series) -> pd.DataFrame:
+def extract_text_lang_udf(html: pa.Array) -> pa.Array:
     """Fused html -> (text, lang) in ONE Arrow crossing.
 
     ``tag_lang(extract_text(html))`` as separate pandas UDFs plans two
@@ -72,8 +78,7 @@ def extract_text_lang_udf(html: pd.Series) -> pd.DataFrame:
     batch, with worker setup dominating task run time).  Computing both
     in one struct-returning UDF sends html once, returns (text, lang)
     once, and reuses the just-extracted text in-process.  Outputs are
-    byte-identical to the unfused chain by construction (same pure
-    functions, same order).
+    byte-identical to the unfused chain by construction (same kernel,
+    same order).
     """
-    texts = html.map(lambda b: extract_text(bytes(b)) if b is not None else None)
-    return pd.DataFrame({"text": texts, "lang": texts.map(tag_lang)})
+    return text_arrow.extract_text_lang(html)

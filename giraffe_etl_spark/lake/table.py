@@ -51,7 +51,7 @@ import uuid
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import IntegerType, LongType, StringType, StructType
 
 from ..session import _conf_pinned
 from .fileio import FileIO, PosixFileIO
@@ -78,6 +78,19 @@ def _struct(fields: list[dict]) -> StructType:
     """The Spark struct of a manifest schema's field list."""
     return StructType.fromDDL(
         ", ".join(f"`{f['name']}` {f['type']}" for f in fields)
+    )
+
+
+def _empty_frame(spark: SparkSession, struct: StructType) -> DataFrame:
+    """A row-less DataFrame built on the JVM: an empty ``LocalRelation``
+    has no partitions, so it runs no task, and the optimizer drops it
+    from a union.  (``spark.createDataFrame([], schema)`` parallelizes
+    an empty Python list: one Python-worker task per core that
+    unpickles nothing.)"""
+    jspark = spark._jsparkSession
+    jstruct = spark._jvm.org.apache.spark.sql.types.DataType.fromJson(struct.json())
+    return DataFrame(
+        jspark.createDataFrame(spark._jvm.java.util.ArrayList(), jstruct), spark
     )
 
 
@@ -675,10 +688,10 @@ class Table:
             groups.setdefault(str(fi["schema_id"]), []).append(fi["path"])
 
         if not groups:
-            empty = self.spark.createDataFrame([], self._current_struct(snap))
+            struct = self._current_struct(snap)
             if with_bucket_col:
-                empty = empty.withColumn("_bucket", F.lit(None).cast("int"))
-            return empty
+                struct = struct.add("_bucket", IntegerType())
+            return _empty_frame(self.spark, struct)
 
         parts = []
         with _conf_pinned(self.spark, _SERIAL_LISTING):
@@ -1366,14 +1379,12 @@ class Table:
                 )
             parts.append(df)
         if not parts:
-            empty = self.spark.createDataFrame([], self._current_struct(to_snap))
+            struct = self._current_struct(to_snap)
             if with_commit_col:
-                empty = empty.withColumn(
-                    "_commit_snapshot", F.lit(None).cast("long")
-                )
+                struct = struct.add("_commit_snapshot", LongType())
             if with_pre_images:
-                empty = empty.withColumn("_change_type", F.lit(None).cast("string"))
-            return empty
+                struct = struct.add("_change_type", StringType())
+            return _empty_frame(self.spark, struct)
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)

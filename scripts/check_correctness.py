@@ -3,11 +3,23 @@
 Runs every __spark_entry__.queries() entry at sf0.01 and compares with
 the DuckDB oracle: row count, column names, and an order-insensitive
 value hash (columns sorted by name, rows sorted, values stringified).
+A query without an oracle_sql() entry fails.
+
+    python scripts/check_correctness.py               # every query
+    python scripts/check_correctness.py q1 cdc_replay # a subset
+
+The last stdout line is a JSON record with one entry per queries() key:
+{"status": "PASS" | "FAIL" | "err" | "skip", "rows", "seconds"} ("err":
+Spark or DuckDB raised; "skip": not in the requested subset).  The exit
+code is non-zero when any query fails, or when the key sets of
+queries() and oracle_sql() differ.
 """
 
 import hashlib
+import json
 import os
 import sys
+import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -52,25 +64,33 @@ def main():
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
 
     qs, oracles = e.queries(), e.oracle_sql()
+    record = {name: {"status": "skip", "rows": None, "seconds": None} for name in qs}
+    unpaired = sorted(set(qs) ^ set(oracles))
+    if unpaired:
+        print(f"FAIL queries() and oracle_sql() keys differ: {unpaired}")
     failures = []
     for name, fn in qs.items():
         if only and name not in only:
             continue
+        entry = record[name]
+        t0 = time.monotonic()
         try:
             got = fn(spark, SF_DIR).toPandas()
         except Exception as ex:
+            entry.update(status="err", seconds=round(time.monotonic() - t0, 3))
             failures.append(name)
             print(f"FAIL {name}: spark error {type(ex).__name__}: {ex}")
             continue
+        entry.update(status="FAIL", rows=len(got), seconds=round(time.monotonic() - t0, 3))
         sql = oracles.get(name)
         if sql is None:
-            print(f"ok   {name}: rows-only ({len(got)} rows)")
-            if len(got) == 0 and name != "noop":
-                print(f"WARN {name}: zero rows")
+            failures.append(name)
+            print(f"FAIL {name}: no oracle_sql() entry ({len(got)} rows)")
             continue
         try:
             want = con.execute(sql).df()
         except Exception as ex:
+            entry["status"] = "err"
             failures.append(name)
             print(f"FAIL {name}: duckdb error {ex}")
             continue
@@ -95,9 +115,11 @@ def main():
                 print("  first diffs:")
                 print(pd.concat([g[diff].head(3), w[diff].head(3)], keys=["got", "want"]))
         else:
+            entry["status"] = "PASS"
             print(f"PASS {name} ({len(got)} rows)")
     print("\n" + ("ALL OK" if not failures else f"FAILURES: {failures}"))
-    return 1 if failures else 0
+    print(json.dumps({"queries": record, "unpaired_keys": unpaired}, sort_keys=True))
+    return 1 if failures or unpaired else 0
 
 
 if __name__ == "__main__":

@@ -695,3 +695,35 @@ def test_sync_runs_a_fixed_number_of_jobs(spark, tmp_root, src_applier):
     assert rep["commits"] == 1
     assert len(jobs) == 2, jobs
     assert _rows(f.dst) == _rows(src_applier.pages)
+
+
+def test_sync_reads_the_head_snapshot_once(spark, tmp_root):
+    """A sync over one source commit reads at most three source metadata
+    files (the ``_current`` pointer, the head manifest, the cursor's
+    manifest): the window is walked from the head snapshot the sync
+    already holds instead of reading the head manifest again."""
+    from giraffe_etl_spark.lake import PosixFileIO
+
+    class ReadCountingIO(PosixFileIO):
+        def __init__(self):
+            super().__init__()
+            self.reads = []
+
+        def read_text(self, path):
+            self.reads.append(path)
+            return super().read_text(path)
+
+    io = ReadCountingIO()
+    applier = CdcApplier(spark, os.path.join(tmp_root, "src"), n_buckets=8, io=io)
+    seed_pages(applier.pages, spark.createDataFrame(gen_pages(50)))
+    f = ChangelogFollower(
+        spark, applier.pages, os.path.join(tmp_root, "dst"), n_buckets=4
+    )
+    _apply(spark, applier, 0, 100, 0)
+    assert applier.pages.current_snapshot().snapshot_id == f.cursor + 1
+    io.reads.clear()
+    rep = f.sync()
+    src = [p for p in io.reads if p.startswith(applier.pages.path)]
+    assert rep["commits"] == 1
+    assert len(src) <= 3, src
+    assert _rows(f.dst) == _rows(applier.pages)

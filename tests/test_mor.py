@@ -72,7 +72,8 @@ def test_mor_commit_io_scales_with_batch_not_table(spark, tmp_root):
 
 
 def test_mor_merge_subtree_single_exchange(spark, tmp_root):
-    """The full MOR merge frame plans exactly ONE shuffle exchange.
+    """The full MOR merge frame plans exactly ONE shuffle exchange and
+    one Arrow UDF node.
 
     32 buckets on the 8-slot session: the aligned exchange has fewer
     partitions than buckets, and the one exchange is that one.
@@ -95,6 +96,9 @@ def test_mor_merge_subtree_single_exchange(spark, tmp_root):
     plan = plan_of(delta)
     assert n_exchanges(plan) == 1, plan
     assert re.search(r"hashpartitioning\(url#\d+, 8\)", plan), plan
+    # html crosses to Python once: text and lang come from ONE fused
+    # Arrow UDF node
+    assert len(re.findall(r"^\(\d+\) ArrowEvalPython", plan, re.M)) == 1, plan
 
 
 def test_mor_skewed_merge_subtree_single_exchange(spark, tmp_root):
@@ -413,3 +417,50 @@ def test_warm_batch_metadata_reads(spark, tmp_root):
     ap.apply_batch(spark_changes(spark, changes.iloc[300:]), batch_id=1)
     pages = [p for p in io.reads if os.sep + "pages" + os.sep in p]
     assert (len(io.reads), len(pages)) == (14, 7), io.reads
+
+
+def _runs_python(df) -> bool:
+    """True when ``df``'s RDD lineage holds a PythonRDD (a Python-worker
+    task per partition) with any partition to run."""
+    rdd = df._jdf.queryExecution().toRdd()
+    return "PythonRDD" in rdd.toDebugString() and rdd.getNumPartitions() > 0
+
+
+def test_lake_reads_run_no_python(spark, tmp_root):
+    """Reads whose empty branches used to be Python-built frames run no
+    Python worker: a read of a snapshot whose buckets all carry deltas,
+    the compaction frame, a lookup of a dirty bucket, ``read_changes``
+    over an empty window and a read of an empty table.  An empty frame
+    is built on the JVM (no partitions), and ``read`` unions no empty
+    branch of clean buckets."""
+    from giraffe_etl_spark.lake import Table
+
+    ap = CdcApplier(spark, tmp_root, n_buckets=4)
+    seed_pages(ap.pages, spark.createDataFrame(gen_pages(40)))
+    ap.apply_batch(_batch(spark, 40, n_keys=40), batch_id=0)
+    snap = ap.pages.current_snapshot()
+    assert set(snap.deltas) == set(snap.buckets)
+
+    compacted = []
+    ap.pages.overwrite_buckets = lambda targets, df, **kw: compacted.append(df)
+    assert ap.pages.compact_deltas() == [0, 1, 2, 3]
+    head = snap.snapshot_id
+    empty = Table.create(
+        spark, os.path.join(tmp_root, "empty"), ap.pages.read().schema,
+        bucket_key="url", n_buckets=4,
+    )
+    reads = {
+        "read": ap.pages.read(),
+        "compact_deltas": compacted[0],
+        "read_keys": ap.pages.read_keys(["http://host0.example.org/page/0"]),
+        "read_changes": ap.pages.read_changes(head, with_commit_col=True),
+        "read_changes_pre_images": ap.pages.read_changes(
+            head, with_pre_images=True
+        ),
+        "empty_table": empty.read(with_bucket_col=True),
+    }
+    assert [name for name, df in reads.items() if _runs_python(df)] == []
+    assert reads["read_keys"].count() == 1
+    assert reads["read_changes_pre_images"].columns[-1] == "_change_type"
+    assert reads["empty_table"].columns[-1] == "_bucket"
+    assert reads["empty_table"].count() == 0
