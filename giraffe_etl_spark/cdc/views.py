@@ -2,23 +2,27 @@
 
 ``ChangelogFollower`` keeps a keyed COPY in sync; ``IncrementalRollup``
 keeps an AGGREGATE in sync without any copy at all.  Each ``sync()``
-reads the source window once with ``read_changes(with_pre_images=True)``
-and applies the signed contributions — 'after' rows add, 'before' rows
-retract — to a tiny rollup table, the standard retraction form of
-incremental view maintenance for additive aggregates (count, sum).
-Non-additive aggregates (max/min/distinct) are deliberately out of
-scope: a retraction can invalidate them without enough information to
+reads the source window once (``read_changes``'s window walk and
+schema remap) and applies the signed contributions — each touched
+key's post-window winner adds, its prior winner retracts — to a tiny
+rollup table, the standard retraction form of incremental view
+maintenance for additive aggregates (count, sum).  Non-additive
+aggregates (max/min/distinct) are deliberately out of scope: a
+retraction can invalidate them without enough information to
 recompute incrementally.
 
 Cost per sync at 100 TB: O(changed files) scan + the bucket-pruned
-pre-image read (both from ``read_changes``), one partial-aggregated
-shuffle down to the touched groups' signed deltas, collected to the
-driver, and a driver-side O(groups) merge and replace of the rollup's
-one file (pyarrow read + write, no Spark job) — the source's base data
-is never re-read and no keyed replica is stored.  Exactly-once comes
-from the same trick the applier and follower use: the source-snapshot
-cursor is committed atomically WITH the rollup data, so a crashed sync
-replays idempotently.
+read of the touched buckets' prior row versions, one keyed aggregate
+that finds each touched key's prior and post winner (partial-aggregated:
+a row crosses the shuffle as its key, merge order, group values and
+measures only), one more down to the touched groups' signed deltas,
+collected to the driver — two exchanges, no window, no join, 3 Spark
+jobs under AQE — and a driver-side O(groups) merge and replace of the
+rollup's one file (pyarrow read + write, no Spark job).  The source's
+base data is never re-read and no keyed replica is stored.
+Exactly-once comes from the same trick the applier and follower use:
+the source-snapshot cursor is committed atomically WITH the rollup
+data, so a crashed sync replays idempotently.
 
 Behavior studied (not ported): the reference has no changelog and no
 derived-view maintenance; its nearest analog is re-running an
@@ -170,18 +174,15 @@ class IncrementalRollup:
     def _all_measures(self) -> dict[str, str]:
         return {**self.measures, _ROWS_COL: "1"}
 
-    def _measure_cols(self, sign) -> list:
-        return [
-            F.sum(sign * F.expr(expr).cast("double")).alias(name)
-            for name, expr in self._all_measures().items()
-        ]
-
     def _aggregate_live(self, df: DataFrame) -> DataFrame:
         live = df.filter(~F.col(self.deleted_col)) if (
             self.deleted_col in df.columns
         ) else df
         return live.groupBy(*self.group_cols).agg(
-            *self._measure_cols(F.lit(1.0))
+            *[
+                F.sum(F.expr(expr).cast("double")).alias(name)
+                for name, expr in self._all_measures().items()
+            ]
         )
 
     def sync(self) -> dict:
@@ -225,45 +226,14 @@ class IncrementalRollup:
                     "the changelog cannot express it; call reseed() to "
                     "re-bootstrap from a full scan"
                 )
-        ch = self.src._read_changes(
-            from_snap, head, window, self.on_rewrite,
-            with_commit_col=False, with_pre_images=True,
-        )
-        live = (
-            ~F.col(self.deleted_col)
-            if self.deleted_col in ch.columns
-            else F.lit(True)
-        )
-        # LWW-correct differential: the window's raw 'after' versions
-        # are CHANGE rows, not the new state — late data can lose to
-        # the prior winner.  The post-state of a touched key is the
-        # merge-order winner over {its 'before' row} U {its 'after'
-        # versions} (reconcile is LWW on that same total order, so no
-        # second table read is needed).  Contribution = +winner (if
-        # live) - 'before' (if live); a window whose versions all lose
-        # nets exactly zero.
-        from pyspark.sql.window import Window
-
-        props = head.properties
-        key_cols = [c.strip() for c in props["merge.key"].split(",")]
-        order_cols = [c.strip() for c in props["merge.order"].split(",")]
-        w = Window.partitionBy(*key_cols).orderBy(
-            *[F.col(c).desc() for c in order_cols]
-        )
-        winner = F.row_number().over(w) == 1
-        sign = (
-            F.when(winner & live, F.lit(1.0)).otherwise(F.lit(0.0))
-            + F.when(
-                (F.col("_change_type") == "before") & live, F.lit(-1.0)
-            ).otherwise(F.lit(0.0))
-        )
-        deltas = (
-            ch.withColumn("_sign", sign)
-            .filter(F.col("_sign") != 0.0)
-            .groupBy(*self.group_cols)
-            .agg(*self._measure_cols(F.col("_sign")))
-        )
-        self._commit_deltas(base, deltas.toArrow(), head.snapshot_id)
+        after, touched = self.src._window_scan(head, window, self.on_rewrite)
+        deltas = None
+        if after is not None:
+            prior = self.src._prior_versions(
+                from_snap, head, touched, reconcile=False
+            )
+            deltas = self._signed_deltas(after, prior, head).toArrow()
+        self._commit_deltas(base, deltas, head.snapshot_id)
         n_rewrites = sum(1 for _, _, removed in window if removed)
         return {
             "commits": len(window) - n_rewrites,
@@ -272,10 +242,87 @@ class IncrementalRollup:
             "src_snapshot": head.snapshot_id,
         }
 
+    def _signed_deltas(
+        self, after: DataFrame, prior: DataFrame, head
+    ) -> DataFrame:
+        """Per-group signed deltas of a window, in one keyed aggregate.
+
+        ``after``: the window's row versions; ``prior``: every stacked
+        version of the touched buckets at the cursor, unreconciled.
+        The window's versions are CHANGE rows, not the new state — late
+        data can lose to the prior winner — so per key, by the source's
+        merge order: ``post`` is the winner over all versions (the
+        key's state at ``head``), ``pre`` the winner over the prior
+        versions only (``max_by`` skips a null ordering; the key's state
+        at the cursor).  A key the window touched contributes +post (if
+        live) and -pre (if live); a window whose versions all lose nets
+        exactly zero.  Each version is cut down to its key, its order
+        and what the rollup reads before the first exchange, so the
+        source's wide columns never cross one."""
+        props = head.properties
+        key_cols = [c.strip() for c in props["merge.key"].split(",")]
+        order_cols = [c.strip() for c in props["merge.order"].split(",")]
+        live = (
+            ~F.col(self.deleted_col)
+            if self.deleted_col in after.columns
+            else F.lit(True)
+        )
+        # tombstones contribute nothing: their measures are never evaluated
+        value = F.struct(
+            *[F.col(c) for c in self.group_cols],
+            *[
+                F.when(live, F.expr(expr).cast("double")).alias(name)
+                for name, expr in self._all_measures().items()
+            ],
+            live.alias("_live"),
+        )
+
+        def versions(df: DataFrame, in_window: bool) -> DataFrame:
+            return df.select(
+                *key_cols,
+                F.struct(*order_cols).alias("_o"),
+                value.alias("_v"),
+                F.lit(in_window).alias("_in_window"),
+            )
+
+        per_key = (
+            versions(after, True)
+            .unionByName(versions(prior, False))
+            .groupBy(*key_cols)
+            .agg(
+                F.max_by("_v", "_o").alias("_post"),
+                F.max_by("_v", F.when(~F.col("_in_window"), F.col("_o"))).alias(
+                    "_pre"
+                ),
+                F.max("_in_window").alias("_touched"),
+            )
+        )
+        signed = (
+            per_key.filter(F.col("_touched"))
+            .select(
+                F.inline(
+                    F.array(
+                        F.struct(F.lit(1.0).alias("_s"), F.col("_post").alias("_v")),
+                        F.struct(F.lit(-1.0).alias("_s"), F.col("_pre").alias("_v")),
+                    )
+                )
+            )
+            .filter(F.col("_v._live"))
+        )
+        return signed.groupBy(
+            *[F.col("_v").getField(c).alias(c) for c in self.group_cols]
+        ).agg(
+            *[
+                F.sum(F.col("_s") * F.col("_v").getField(name)).alias(name)
+                for name in self._all_measures()
+            ]
+        )
+
     def _commit_deltas(self, base, deltas, src_snapshot: int) -> None:
-        """Add the signed per-group ``deltas`` (a pyarrow Table) to the
-        rollup rows of ``base`` and replace them, with the new cursor,
-        in one commit — on the driver, both sides being O(groups) rows.
+        """Add the signed per-group ``deltas`` (a pyarrow Table, or None
+        for a window that added no rows) to the rollup rows of ``base``
+        and replace them, with the new cursor, in one commit — on the
+        driver, both sides being O(groups) rows.
         A concurrent sync that committed since ``base`` makes this one
         raise ``CommitConflict`` (``overwrite_local``'s guard) instead
         of adding the same window twice.
@@ -294,7 +341,10 @@ class IncrementalRollup:
             return zip(*[tbl.column(c).to_pylist() for c in cols])
 
         merged: dict[tuple, list[float]] = {}
-        for tbl in (self.dst.read_local(base), deltas):
+        tables = [self.dst.read_local(base)]
+        if deltas is not None:
+            tables.append(deltas)
+        for tbl in tables:
             for r in rows(tbl):
                 tot = merged.setdefault(r[:g], [0.0] * len(names))
                 for i, v in enumerate(r[g:]):

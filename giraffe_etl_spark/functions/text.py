@@ -109,7 +109,7 @@ _LANG_STOPWORDS: dict[str, frozenset[str]] = {
     ),
 }
 _LANGS = sorted(_LANG_STOPWORDS)  # deterministic tie-break order
-_WORD_RE = re.compile(r"[a-záéíóöőúüűàâçèêëîïôûñß]+")
+_WORD_RE = re.compile(r"[a-záéíóöőúüűàâçèêëîïôûñßãõ]+")
 
 
 def tag_lang(text: str | None) -> str | None:

@@ -91,6 +91,7 @@ _LOWER_EXCEPTIONS = r"[\x{130}\x{3a3}]"
 _WORD = (
     r"a-z\x{e1}\x{e9}\x{ed}\x{f3}\x{f6}\x{151}\x{fa}\x{fc}\x{171}\x{e0}"
     r"\x{e2}\x{e7}\x{e8}\x{ea}\x{eb}\x{ee}\x{ef}\x{f4}\x{fb}\x{f1}\x{df}"
+    r"\x{e3}\x{f5}"
 )
 _NOT_WORD_RUN = r"[^ " + _WORD + r"]+"
 

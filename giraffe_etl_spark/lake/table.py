@@ -1343,6 +1343,45 @@ class Table:
     ) -> DataFrame:
         """``read_changes`` over an already walked ``window``
         (``_commits(from_snap, to_snap)``)."""
+        out, touched = self._window_scan(to_snap, window, on_rewrite, with_commit_col)
+        if out is None:
+            struct = self._current_struct(to_snap)
+            if with_commit_col:
+                struct = struct.add("_commit_snapshot", LongType())
+            if with_pre_images:
+                struct = struct.add("_change_type", StringType())
+            return _empty_frame(self.spark, struct)
+        if not with_pre_images:
+            return out
+        out = out.withColumn("_change_type", F.lit("after"))
+        key_cols = [
+            c.strip()
+            for c in to_snap.properties.get("merge.key", "").split(",")
+            if c.strip()
+        ]
+        if not key_cols:
+            raise ValueError("with_pre_images requires the merge.key property")
+        prior = self._prior_versions(from_snap, to_snap, touched, reconcile=True)
+        before = prior.join(
+            out.select(*key_cols).distinct(), key_cols, "left_semi"
+        )
+        if with_commit_col:
+            before = before.withColumn(
+                "_commit_snapshot", F.lit(None).cast("long")
+            )
+        return out.unionByName(before.withColumn("_change_type", F.lit("before")))
+
+    def _window_scan(
+        self,
+        to_snap: Snapshot,
+        window: list[tuple[Snapshot, list[dict], list[str]]],
+        on_rewrite: str,
+        with_commit_col: bool = False,
+    ) -> tuple[DataFrame | None, set[str]]:
+        """The rows added by the window's pure-append commits, mapped
+        onto the ``to`` schema (None when no commit added any), and the
+        buckets those commits touched (numbered under their own layout).
+        Applies ``read_changes``'s rollback and ``on_rewrite`` rules."""
         if on_rewrite not in ("error", "skip"):
             raise ValueError(f"on_rewrite must be 'error' or 'skip': {on_rewrite!r}")
         parts = []
@@ -1366,12 +1405,11 @@ class Table:
                 continue
             if not added:
                 continue
-            if with_pre_images:
-                added_paths = {fi["path"] for fi in added}
-                for m in (snap.buckets, snap.deltas):
-                    for b, fs in m.items():
-                        if any(fi["path"] in added_paths for fi in fs):
-                            touched_buckets.add(b)
+            added_paths = {fi["path"] for fi in added}
+            for m in (snap.buckets, snap.deltas):
+                for b, fs in m.items():
+                    if any(fi["path"] in added_paths for fi in fs):
+                        touched_buckets.add(b)
             df = self._scan(to_snap, added, with_bucket_col=False)
             if with_commit_col:
                 df = df.withColumn(
@@ -1379,25 +1417,22 @@ class Table:
                 )
             parts.append(df)
         if not parts:
-            struct = self._current_struct(to_snap)
-            if with_commit_col:
-                struct = struct.add("_commit_snapshot", LongType())
-            if with_pre_images:
-                struct = struct.add("_change_type", StringType())
-            return _empty_frame(self.spark, struct)
+            return None, touched_buckets
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
-        if not with_pre_images:
-            return out
-        out = out.withColumn("_change_type", F.lit("after"))
-        key_cols = [
-            c.strip()
-            for c in to_snap.properties.get("merge.key", "").split(",")
-            if c.strip()
-        ]
-        if not key_cols:
-            raise ValueError("with_pre_images requires the merge.key property")
+        return out, touched_buckets
+
+    def _prior_versions(
+        self,
+        from_snap: Snapshot,
+        to_snap: Snapshot,
+        touched_buckets: set[str],
+        reconcile: bool,
+    ) -> DataFrame:
+        """The ``from`` snapshot's rows in the window's touched buckets
+        (``_window_scan``), remapped onto the ``to`` schema by column
+        id.  ``reconcile=False``: every stacked row version, unmerged."""
         # touched buckets are numbered under the commits' (post-window)
         # layout; the prior-state scan runs against the FROM snapshot's
         # layout.  After a mid-window rescale (k*N split, skipped as a
@@ -1413,12 +1448,12 @@ class Table:
             sel = sorted({int(b) % from_n for b in touched_buckets})
         else:
             sel = None
-        prior = self.read(from_snap, buckets=sel)
+        prior = self.read(from_snap, buckets=sel, reconcile=reconcile)
         # remap the from-snapshot frame onto the to-snapshot schema by
         # column id: renames resolve, widened types cast, columns added
         # since `from` materialize as nulls
         src_by_id = {f["id"]: f for f in from_snap.schema_fields}
-        prior = prior.select(
+        return prior.select(
             *[
                 (
                     F.col(src_by_id[f["id"]]["name"]).cast(f["type"])
@@ -1428,14 +1463,6 @@ class Table:
                 for f in to_snap.schema_fields
             ]
         )
-        before = prior.join(
-            out.select(*key_cols).distinct(), key_cols, "left_semi"
-        )
-        if with_commit_col:
-            before = before.withColumn(
-                "_commit_snapshot", F.lit(None).cast("long")
-            )
-        return out.unionByName(before.withColumn("_change_type", F.lit("before")))
 
     def rollback(self, snapshot_id: int) -> Snapshot:
         """Roll the table back to an earlier snapshot's state.

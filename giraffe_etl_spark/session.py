@@ -79,6 +79,13 @@ def get_spark(
             + os.environ.get("SPARK_GRAFT_JVM_OPTS", ""),
         )
         .config("spark.ui.enabled", "false")
+        # No call-site capture: PySpark's DataFrame debugging wraps every
+        # Column and ``functions`` call to walk the Python stack and set
+        # the JVM's current origin, about ten gateway round trips a call
+        # (F.col makes 13 with it, 3 without).  The frames it records for
+        # engine-built plans are the engine's own lines; errors still
+        # raise without them.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
     for k, v in (extra_conf or {}).items():

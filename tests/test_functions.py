@@ -48,6 +48,14 @@ class TestTagLang:
     def test_fr(self):
         assert tag_lang("le chien est dans la maison pour la nuit") == "fr"
 
+    def test_tilde_vowels_are_word_letters(self):
+        # "não" is one word (the pt stopword), not "n" + the stopword
+        # "o"; a word with ã or õ that is no stopword scores nothing
+        assert tag_lang("não") == "pt"
+        assert tag_lang("são") == "und"
+        assert tag_lang("põe") == "und"
+        assert tag_lang("NÃO") == "pt"
+
     def test_und(self):
         assert tag_lang("zzz qqq xxx") == "und"
         assert tag_lang("") == "und"

@@ -83,6 +83,11 @@ def test_tag_lang_matches_oracle(rows):
     assert got.to_pylist() == [text.tag_lang(t) for t in rows]
 
 
+def test_tilde_vowels_are_word_letters_in_the_kernel():
+    got = text_arrow.tag_lang(pa.array(["não", "são", "põe", "NÃO"]))
+    assert got.to_pylist() == ["pt", "und", "und", "pt"]
+
+
 def _kernel_class(cls: str) -> set[int]:
     """Every code point a one-character RE2 class of the kernel matches."""
     arr = pa.array([chr(c) for c in CODE_POINTS])

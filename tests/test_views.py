@@ -420,11 +420,11 @@ def test_rollup_expired_cursor_raises_resync_and_reseeds(spark, tmp_root):
 
 def test_rollup_sync_runs_a_fixed_number_of_jobs(spark, tmp_root, src_applier):
     """One sync over a fixed small window runs an exact number of Spark
-    jobs: the signed-delta aggregate's stages (AQE, on outside the
-    apply, runs each shuffle stage as its own job) and nothing else.
-    The scans open from the manifests (no listing or schema-inference
-    job), and the current rows are read, merged and replaced on the
-    driver (no join, no rewrite job)."""
+    jobs: the signed-delta aggregate's two shuffle stages and its result
+    stage (AQE, on outside the apply, runs each as its own job) and
+    nothing else.  The scans open from the manifests (no listing or
+    schema-inference job), and the current rows are read, merged and
+    replaced on the driver (no join, no rewrite job)."""
     from tests.test_lake import jobs_run
 
     rollup = IncrementalRollup(
@@ -436,7 +436,7 @@ def test_rollup_sync_runs_a_fixed_number_of_jobs(spark, tmp_root, src_applier):
     )
     _apply(spark, src_applier, 0, 100, 0)
     _, jobs = jobs_run(spark, rollup.sync)
-    assert len(jobs) == 5, jobs
+    assert len(jobs) == 3, jobs
     assert _rollup_rows(rollup) == _recompute(src_applier.pages)
 
 
@@ -607,3 +607,143 @@ def test_rollup_racing_syncs_never_fold_a_window_twice(
     monkeypatch.undo()
     assert second.sync()["commits"] == 0
     assert _rollup_rows(second) == _recompute(src_applier.pages)
+
+
+def _lww_table(spark, tmp_root):
+    schema = StructType.fromDDL(
+        "url string, warc_ts long, lang string, score long, html string, "
+        "_lsn long, _deleted boolean"
+    )
+    t = Table.create(
+        spark,
+        os.path.join(tmp_root, "t"),
+        schema,
+        bucket_key="url",
+        n_buckets=2,
+        properties={"merge.key": "url", "merge.order": "warc_ts,_lsn"},
+    )
+    return t, lambda xs: spark.createDataFrame(xs, schema)
+
+
+def _lww_recompute(t):
+    return sorted(
+        (r["lang"], r["n"], r["score"])
+        for r in t.read()
+        .filter(~F.col("_deleted"))
+        .groupBy("lang")
+        .agg(
+            F.count(F.lit(1)).cast("double").alias("n"),
+            F.sum("score").cast("double").alias("score"),
+        )
+        .collect()
+    )
+
+
+def _lww_rollup_rows(rollup):
+    return sorted((r["lang"], r["n"], r["score"]) for r in rollup.read().collect())
+
+
+def _lww_rollup(spark, tmp_root, t):
+    return IncrementalRollup(
+        spark,
+        t,
+        os.path.join(tmp_root, "rollup"),
+        group_cols=["lang"],
+        measures={"n": "1", "score": "score"},
+    )
+
+
+def test_rollup_multi_commit_window_matches_recompute(spark, tmp_root):
+    """One sync folds a window of four commits whose versions interact
+    across commits and with the prior state, and the rollup equals the
+    recompute after every sync:
+
+    - u1 changes group twice inside the window (xx -> yy -> zz);
+    - u2's window version is late: it loses to the prior winner;
+    - u3 is deleted, then re-inserted into another group;
+    - u4's prior winner is a tombstone, and the window re-inserts it;
+    - u5's prior winner is a tombstone, and its late insert loses."""
+    t, rows = _lww_table(spark, tmp_root)
+    t.append(
+        rows(
+            [
+                ("u1", 1, "xx", 1, "<p>a</p>", 1, False),
+                ("u2", 5, "xx", 2, "<p>b</p>", 2, False),
+                ("u3", 1, "yy", 3, "<p>c</p>", 3, False),
+                ("u4", 1, "yy", 4, "<p>d</p>", 4, False),
+                ("u5", 1, "yy", 5, "<p>e</p>", 5, False),
+            ]
+        )
+    )
+    t.append_deltas(
+        None,
+        rows(
+            [
+                ("u4", 2, None, None, None, 6, True),
+                ("u5", 5, None, None, None, 7, True),
+            ]
+        ),
+    )
+    rollup = _lww_rollup(spark, tmp_root, t)
+    assert _lww_rollup_rows(rollup) == _lww_recompute(t)
+    window = [
+        [
+            ("u1", 2, "yy", 10, "<p>a2</p>", 10, False),
+            ("u2", 3, "zz", 20, "<p>late</p>", 11, False),
+            ("u3", 2, None, None, None, 12, True),
+        ],
+        [
+            ("u1", 3, "zz", 100, "<p>a3</p>", 13, False),
+            ("u4", 3, "zz", 40, "<p>d2</p>", 14, False),
+        ],
+        [("u3", 3, "ww", 30, "<p>c2</p>", 15, False)],
+        [("u5", 2, "ww", 50, "<p>e-late</p>", 16, False)],
+    ]
+    for commit in window:
+        t.append_deltas(None, rows(commit))
+    rep = rollup.sync()
+    assert rep["commits"] == len(window)
+    assert _lww_rollup_rows(rollup) == _lww_recompute(t)
+    assert _lww_rollup_rows(rollup) == [
+        ("ww", 1.0, 30.0),
+        ("xx", 1.0, 2.0),
+        ("zz", 2.0, 140.0),
+    ]
+
+    # a second window over the folded state: u1 deleted, u2 moved
+    t.append_deltas(None, rows([("u1", 4, None, None, None, 17, True)]))
+    t.append_deltas(None, rows([("u2", 6, "ww", 7, "<p>b2</p>", 18, False)]))
+    rollup.sync()
+    assert _lww_rollup_rows(rollup) == _lww_recompute(t)
+
+
+def test_rollup_sync_plans_one_keyed_aggregate(spark, tmp_root, monkeypatch):
+    """The signed deltas are one aggregate per key and one per group:
+    exactly two exchanges, no window and no join, and the source's
+    wide column (html) is never read."""
+    t, rows = _lww_table(spark, tmp_root)
+    t.append(rows([("u1", 1, "xx", 1, "<p>a</p>", 1, False)]))
+    rollup = _lww_rollup(spark, tmp_root, t)
+    t.append_deltas(None, rows([("u1", 2, "yy", 2, "<p>b</p>", 2, False)]))
+    t.append_deltas(None, rows([("u2", 1, "yy", 3, "<p>c</p>", 3, False)]))
+
+    planned = []
+    frame_class = type(spark.range(1))
+    to_arrow = frame_class.toArrow
+
+    def record(df):
+        qe = df._jdf.queryExecution()
+        # before it runs: AQE shows its initial plan only
+        planned.append((qe.optimizedPlan().toString(), qe.executedPlan().toString()))
+        return to_arrow(df)
+
+    monkeypatch.setattr(frame_class, "toArrow", record)
+    rollup.sync()
+    monkeypatch.undo()
+    assert len(planned) == 1
+    optimized, physical = planned[0]
+    exchanges = [ln for ln in physical.splitlines() if "Exchange" in ln]
+    assert len(exchanges) == 2, physical
+    assert "Window" not in optimized and "Join" not in optimized, optimized
+    assert "html" not in physical, physical
+    assert _lww_rollup_rows(rollup) == _lww_recompute(t)
